@@ -98,7 +98,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     docs = _docs(spark, "/root/testdata/sf0.001")
     spans = text_docs_to_span_table(docs)
-    out = extract_pipeline(spans, with_resume=True)
+    out = extract_pipeline(spans)
     return out.select(
         "doc_id",
         "blocks_kept",
@@ -481,9 +481,8 @@ def _q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash fingerprints via explode + codegen per-bit SUM aggregates
-    (scale path; exact DuckDB twin). The pandas-UDF 64-bit variant
-    remains exported as textstats.with_simhash."""
+    """SimHash fingerprints via textstats.simhash_agg: one per-doc
+    mapInArrow bit vote over 60-bit token hashes (exact DuckDB twin)."""
     from document_parser_private_spark.operators.textstats import simhash_agg
     return simhash_agg(_docs(spark, sf_dir))
 

@@ -359,11 +359,10 @@ CPU burn between 8 and 32 pinned CPUs. Raw best-config 8->32 this run:
 
 ## Pipeline scaling design
 
-The plan is a single narrow stage: parquet scan -> native span
-classification (whole-stage codegen, order-free, boilerplate never
-crosses Arrow) -> ONE fused ArrowEvalPython node (layout inference +
-section FSM + entity extraction in one Arrow crossing; see
-operators/resume.py extract_all_op) -> native projections. Zero
+The plan is a single narrow stage: parquet scan -> ONE fused
+MapInArrow node (span classification + layout inference + section FSM
++ entity extraction in one Arrow crossing; see operators/resume.py
+extract_all_fused_op) -> native projections. Zero
 shuffles on the salt-bucketed storage layout (repartition=False);
 ad-hoc inputs take the salted-exchange path (bench.py, tests). At 1000
 executors the same plan adds scan splits and nothing else — no

@@ -20,7 +20,9 @@ AS_OF_ISO = "2025-07-11"
 PRESENT_JRE = r"(?i)\b(present|current|ongoing|now)\b"
 ISO_JRE = r"^(\d{4})-(\d{2})-(\d{2})$"
 QUARTER_JRE = r"(?i)\bQ([1-4])\s*(\d{4})\b"
-MONTH_YEAR_JRE = r"(?i)([a-zA-Z]+)[^\d]*(\d{4})"
+# linear-time form of (?i)([a-zA-Z]+)[^\d]*(\d{4}) — same matches; see
+# semantics._MONTH_YEAR_RE for why
+MONTH_YEAR_JRE = r"(?i)(?:^|(?<=\d))[^a-zA-Z\d]*+([a-zA-Z]++)[^\d]*+(\d{4})"
 NUM_MONTH_YEAR_JRE = r"(\d{1,2})[^\d]*(\d{4})"
 YEAR_JRE = r"(\d{4})"
 

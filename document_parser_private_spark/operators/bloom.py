@@ -97,4 +97,6 @@ def bloom_prune(probe: DataFrame, probe_col: str, bloom: DataFrame,
             bitmap, (F.floor(pos / F.lit(64)) + 1).cast("int"))
         bit = F.element_at(bits, F.pmod(pos, F.lit(64)).cast("int") + 1)
         pass_expr = pass_expr & (word.bitwiseAND(bit) != 0)
-    return probe.withColumn("bloom_pass", pass_expr.cast("int"))
+    # a null key has null positions: it fails the filter (0, not NULL)
+    return probe.withColumn(
+        "bloom_pass", F.coalesce(pass_expr, F.lit(False)).cast("int"))

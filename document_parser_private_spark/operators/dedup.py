@@ -3,10 +3,10 @@ SimHash-distance, embedding-cosine) — core training-data-pipeline ops.
 
 Scale design notes (100 TB posture):
   - exact dedup: one shuffle on the 16-byte fingerprint; AQE coalesces.
-  - MinHash signatures: computed entirely per-row with higher-order
-    functions (NO shuffle, no UDF); only the band explode + groupBy
-    shuffles, and it shuffles 8 small (band_idx, band_key) rows per doc
-    instead of full text.
+  - MinHash signatures: computed per doc in one mapInArrow pass
+    (minhash_signatures_agg, NO shuffle); only the band explode +
+    groupBy shuffles, and it shuffles 8 small (band_idx, band_key) rows
+    per doc instead of full text.
   - pairwise ops (jaccard, cosine) are always bucketed (same source /
     label / LSH band) so the join is a bounded self-join per bucket,
     never a global cross product.
@@ -37,69 +37,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
         F.min(id_col).alias("keep_id"),
         F.count("*").cast("long").alias("dup_count"),
     )
-
-
-def word_shingles_col(text: Column, k: int = 3) -> Column:
-    """k-word shingles; whole text when shorter than k words.
-
-    The tokenizer is bound ONCE per row (functions.bind.bind_once): the
-    sliding-window transform references `words` per shingle, and an
-    unbound reference would re-run the regex per element — measured 5-9x
-    on the minhash path at sf0.1."""
-    toks = F.regexp_extract_all(text, F.lit(WORD_RE), F.lit(0))
-
-    def mk(words: Column) -> Column:
-        n = F.size(words)
-        shingles = F.transform(
-            F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-        )
-        return F.when(n >= k, shingles).otherwise(
-            F.array(F.concat_ws(" ", words))
-        )
-
-    return bind_once(toks, mk)
-
-
-def minhash_signature_col(shingles: Column,
-                          n_hashes: int = N_MINHASHES) -> Column:
-    """array of n minhashes: sig[i] = min over shingles of
-    md5(i || '|' || shingle) — per-row, shuffle-free. The shingles
-    argument is bound once (it is referenced per hash index i).
-    minhash_signatures_agg remains the fast path (codegen partial
-    aggregation, one md5 per shingle)."""
-    def sig(sh: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-            lambda i: F.array_min(
-                F.transform(
-                    sh,
-                    lambda s: F.md5(F.concat(i.cast("string"), F.lit("|"), s)),
-                )
-            ),
-        )
-
-    return bind_once(shingles, sig)
-
-
-def band_keys_col(sig: Column, n_bands: int = N_BANDS,
-                  rows_per_band: int = N_MINHASHES // N_BANDS) -> Column:
-    """LSH band keys: md5 of the concatenated signature slice per band."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.md5(
-            F.concat_ws(
-                ",", F.slice(sig, b * rows_per_band + 1, rows_per_band)
-            )
-        ),
-    )
-
-
-def with_minhash(df: DataFrame, text_col: str = "text",
-                 k: int = 3) -> DataFrame:
-    shingles = word_shingles_col(F.col(text_col), k)
-    return df.withColumn("minhash_sig", minhash_signature_col(shingles)) \
-             .withColumn("band_keys", band_keys_col(F.col("minhash_sig")))
 
 
 # Mersenne prime field for the permutation family; 31-bit keeps

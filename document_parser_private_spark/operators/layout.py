@@ -1,43 +1,23 @@
 """Layout pass: recover reading order from geometric span offsets.
 
-Two variants (north_star: "line clustering by y-offset, column detection,
-reading-order sort"; the reference itself only relies on implicit block
-order, reference parsing_engine/layout_analyzer.py:17-31):
-
-- `layout_order_op` — real layout INFERENCE over packed (y, x) offsets
-  (offset = y*X_STRIDE + x): cluster jittered baselines into lines,
-  detect a column gutter from the x distribution, sort column-major.
-  Vectorized pandas UDF, semantics shared with the oracle.
-- `reading_order_sort` — the degenerate native sort by ascending offset,
-  for sources whose offsets already encode reading order (e.g. the
-  plain-text source's sequential line numbers). Stays inside
-  WholeStageCodegen; `array_sort(col)` on struct arrays would sort by
-  declared field order (kind first — wrong), hence the comparator lambda.
+North_star: "line clustering by y-offset, column detection, reading-order
+sort"; the reference itself only relies on implicit block order
+(reference parsing_engine/layout_analyzer.py:17-31). `layout_order_op`
+runs real layout INFERENCE over packed (y, x) offsets
+(offset = y*X_STRIDE + x): cluster jittered baselines into lines, detect
+a column gutter from the x distribution, sort column-major. Vectorized
+pandas UDF, semantics shared with the oracle.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .. import semantics as S
-
-
-def reading_order_col(spans: Column) -> Column:
-    return F.array_sort(
-        spans,
-        lambda l, r: F.when(l["offset"] < r["offset"], F.lit(-1))
-        .when(l["offset"] > r["offset"], F.lit(1))
-        .otherwise(F.lit(0)),
-    )
-
-
-def reading_order_sort(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    return df.withColumn(spans_col, reading_order_col(F.col(spans_col)))
-
 
 # ---------------------------------------------------------------------------
 # Geometric layout inference (north_star: line clustering by y-offset,
@@ -74,8 +54,9 @@ def _layout_order_udf(spans: pd.Series) -> pd.Series:
 def layout_order_op(df: DataFrame, spans_col: str = "clean_spans") -> DataFrame:
     """Vectorized layout pass over span arrays: cluster lines by y
     proximity, detect a column gutter from the x distribution, emit spans
-    in column-major reading order with offsets renumbered. Use AFTER the
-    (order-free) native classify filter; the fused pipeline path instead
-    runs this inside operators.resume.extract_all_op (one Arrow crossing).
+    in column-major reading order with offsets renumbered. The extraction
+    pipeline does not call this: its per-doc kernel
+    (operators.resume.clean_and_sections) runs the same inference after
+    classify, inside its one Arrow crossing.
     """
     return df.withColumn(spans_col, _layout_order_udf(F.col(spans_col)))

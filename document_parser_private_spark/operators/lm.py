@@ -160,16 +160,13 @@ def ngram_counts(df: DataFrame, n: int = 3, min_count: int = 2,
     Emits (gram, n_occurrences, n_docs) — gram is the space-joined
     token window.
 
-    Scale shape: tokens are bound ONCE per row (bind_once — a naive
-    lambda reference would re-run the tokenizer per gram, PLANS.md §5);
-    grams collapse to (doc, gram, cnt) with map-side partial
-    aggregation BEFORE the corpus-level rollup, so the first exchange
-    carries per-doc distinct grams (bounded by doc length) and the
-    second carries one row per (gram, doc) — document frequency comes
-    from the same collapsed table, never a distinct over raw
-    occurrences. min_count pruning happens after the final agg; the
-    Zipf tail it removes never leaves the aggregation buffers
-    un-collapsed.
+    Scale shape: one counted mapInArrow pass (trainprep's
+    _ngram_rows_arrow) tokenizes each doc once and emits its distinct
+    grams as (doc, gram, cnt) rows, so the single exchange carries one
+    row per (gram, doc), bounded by doc length — document frequency
+    comes from the same collapsed table, never a distinct over raw
+    occurrences. min_count pruning happens after the final agg, which
+    collapses the Zipf tail map-side before the shuffle.
     """
     # gram rows ride the shared mapInArrow builder (trainprep): the
     # interpreted transform(slice+array_join) per gram was this

@@ -1,17 +1,22 @@
-"""Per-section resume entity extraction (deterministic regex path).
+"""Per-doc extraction kernel and per-section resume entity extraction
+(deterministic regex path).
 
-Mix of native expressions and vectorized pandas UDFs:
-  contact / summary / certifications — pure Catalyst expressions
-  skills / education / experience / projects — pandas UDFs over section
-    text (fuzzy ontology normalization + sequential entry parsing), Arrow
-    batched; the small ontology dims ride inside the UDF closure (at
-    cluster scale they'd be sc.broadcast — same data path, the closure is
-    pickled once per executor).
+  decode_spans / clean_and_sections — the per-doc kernel shared by the
+    batch pass below and streaming.stream_extract: Arrow span decode,
+    then classify + layout + section FSM via the oracle's semantics
+  extract_all_fused_op — the batch pipeline's ONE mapInArrow crossing:
+    the kernel plus skills / education / experience / projects over the
+    section texts (fuzzy ontology normalization + sequential entry
+    parsing)
+  contact / summary / certifications — pure Catalyst expressions over
+    the returned sections struct
+  _education_udf / _experience_udf — the entry parsers as standalone
+    pandas UDFs over arbitrary text columns
 
 Zero shuffles: every extraction is doc-local. The alternative
 explode->broadcast-join->groupBy formulation of skill normalization exists
 in operators/normalize.py for relational use; this operator keeps the hot
-path narrow (SURVEY §2.10 U3 short-circuit lives inside the UDF: exact
+path narrow (SURVEY §2.10 U3 short-circuit lives inside the kernel: exact
 dict hit first, fuzzy only on miss).
 
 Reference behavior: entity_extractor.py:49-286 minus NER (SURVEY §7.3
@@ -31,7 +36,9 @@ from .. import semantics as S
 from ..corpus import SKILLS_ONTOLOGY
 from ..functions.contact import contact_struct
 from ..functions.text import summary_col, split_entries_col
-from ..oracle import build_skill_index
+from ..oracle import build_skill_index, classify_and_emit
+from .layout import SPAN_TYPE
+from .sections import SECTIONS_TYPE, sections_of_span_list
 
 _LOWER, _V2C, _INDEX = build_skill_index(SKILLS_ONTOLOGY)
 # phrase-level fuzzy memo, shared across Arrow batches within the Python
@@ -64,13 +71,6 @@ PROJECTS_TYPE = T.ArrayType(T.StructType([
 ]))
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def _skills_udf(text: pd.Series) -> pd.Series:
-    return text.apply(
-        lambda t: S.extract_skills(t or "", _LOWER, _V2C, _INDEX, memo=_MEMO)
-    )
-
-
 @pandas_udf(EDUCATION_TYPE)
 def _education_udf(text: pd.Series) -> pd.Series:
     return text.apply(lambda t: S.extract_education_entries(t or ""))
@@ -89,111 +89,64 @@ def _experience_udf(text: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(PROJECTS_TYPE)
-def _projects_udf(text: pd.Series) -> pd.Series:
-    return text.apply(
-        lambda t: S.extract_project_entries(
-            t or "",
-            skill_lower_index=_LOWER,
-            skill_var2canon=_V2C,
-            skill_index=_INDEX,
-            memo=_MEMO,
-        )
-    )
-
-
-from .layout import SPAN_TYPE, order_spans_py
-from .sections import SECTIONS_FIELDS, SECTIONS_TYPE, sections_of_span_list
-
-EXTRACT_ALL_TYPE = T.StructType([
+# The kernel's output columns, in order (batch adds the id and entities).
+CLEAN_FIELDS = [
     T.StructField("clean_spans", SPAN_TYPE),
+    T.StructField("blocks_kept", T.IntegerType()),
+    T.StructField("blocks_dropped", T.IntegerType()),
     T.StructField("sections", SECTIONS_TYPE),
-    T.StructField("skills", T.ArrayType(T.StringType())),
-    T.StructField("education", EDUCATION_TYPE),
-    T.StructField("experience", EXPERIENCE_TYPE),
-    T.StructField("projects", PROJECTS_TYPE),
-])
+]
 
 
-@pandas_udf(EXTRACT_ALL_TYPE)
-def _extract_all_udf(spans: pd.Series) -> pd.DataFrame:
-    """Fused layout inference + section FSM + entity extraction: the
-    plan's ONLY Python node, ONE Arrow crossing.
+def decode_spans(list_array) -> list:
+    """Arrow array<struct<kind,text,media_ref,offset>> -> one list of
+    span dicts per row (None for a null row).
 
-    Input is the natively-filtered spans (original geometric offsets);
-    this pass (1) infers reading order (line clustering / column
-    detection, semantics.layout_reading_order) and renumbers offsets,
-    (2) runs the section FSM, (3) extracts entities — all on Python-local
-    data. The staged path (layout_order_op -> detect_sections_op ->
-    extract_resume_op) ships spans across Arrow three times; fusing ships
-    them once. Same semantics (golden-parity pytest-enforced); the staged
-    ops remain exported for composability.
-    """
-    rows = []
-    for arr in spans:
-        ordered = order_spans_py(arr)
-        secs = sections_of_span_list(ordered)
-        rows.append({
-            "clean_spans": ordered,
-            "sections": secs,
-            "skills": S.extract_skills(
-                secs.get("skills") or "", _LOWER, _V2C, _INDEX, memo=_MEMO),
-            "education": S.extract_education_entries(
-                secs.get("education") or ""),
-            "experience": S.extract_experience_entries(
-                secs.get("experience") or "",
-                skill_lower_index=_LOWER, skill_var2canon=_V2C,
-                skill_index=_INDEX, memo=_MEMO),
-            "projects": S.extract_project_entries(
-                secs.get("projects") or "",
-                skill_lower_index=_LOWER, skill_var2canon=_V2C,
-                skill_index=_INDEX, memo=_MEMO),
-        })
-    return pd.DataFrame(rows, columns=[f.name for f in EXTRACT_ALL_TYPE])
-
-
-def extract_all_op(df: DataFrame, spans_col: str = "clean_spans") -> DataFrame:
-    """Fused layout+sections+entities from natively-filtered spans;
-    native contact/summary/certifications over the returned sections
-    struct (prunable fields).
-
-    Requires the spans column to be optimizer-barriered
-    (classify_spans(..., barrier=True)) when it is built from
-    higher-order-function expressions: Spark cannot extract a Python UDF
-    whose inlined argument carries lambda functions, and CollapseProject
-    inlines single-reference producers ("Cannot generate code for
-    expression: ..._udf(transform(filter(...)))")."""
-    ext = _extract_all_udf(F.col(spans_col))
-    df = df.withColumn("_ext", ext)
-    sec = F.col("_ext")["sections"]
-    return (
-        df.withColumn("clean_spans", F.col("_ext")["clean_spans"])
-        .withColumn("sections", sec)
-        .withColumn("contact", contact_struct(sec["contact"]))
-        .withColumn("summary", summary_col(F.coalesce(sec["summary"], F.lit(""))))
-        .withColumn("skills", F.col("_ext")["skills"])
-        .withColumn("education", F.col("_ext")["education"])
-        .withColumn("experience", F.col("_ext")["experience"])
-        .withColumn("projects", F.col("_ext")["projects"])
-        .withColumn(
-            "certifications",
-            split_entries_col(F.coalesce(sec["certifications"], F.lit(""))),
+    Decodes via the FLAT child arrays: one to_pylist per primitive
+    child + one C-speed zip, then per-row slices of the flat dict list —
+    measured 226 -> 80 us/doc vs ListArray.to_pylist's nested dict
+    materialization (~12% of the whole warm per-doc budget)."""
+    sv = list_array.values
+    flat = [
+        {"kind": k, "text": tx, "media_ref": m, "offset": o}
+        for k, tx, m, o in zip(
+            sv.field("kind").to_pylist(),
+            sv.field("text").to_pylist(),
+            sv.field("media_ref").to_pylist(),
+            sv.field("offset").to_pylist(),
         )
-        .drop("_ext")
-    )
+    ]
+    offs = list_array.offsets.to_pylist()
+    if list_array.null_count:
+        valid = [v.is_valid for v in list_array]
+        return [flat[offs[i]:offs[i + 1]] if valid[i] else None
+                for i in range(len(list_array))]
+    return [flat[offs[i]:offs[i + 1]] for i in range(len(list_array))]
+
+
+def clean_and_sections(spans) -> tuple:
+    """One doc's raw spans -> (clean_spans, blocks_kept, blocks_dropped,
+    sections): classify, layout inference and offset renumbering
+    (oracle.classify_and_emit), then the section FSM. Null spans give
+    empty clean_spans, NULL counts and empty sections."""
+    if spans is None:
+        clean, kept, dropped = [], None, None
+    else:
+        clean, kept, dropped = classify_and_emit(spans)
+    return clean, kept, dropped, sections_of_span_list(clean)
 
 
 def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
                          id_col: str = "doc_id") -> DataFrame:
-    """Whole-pipeline fused Python pass: classify + layout + section FSM
-    + entity extraction in ONE mapInArrow crossing, RAW spans in, final
-    extraction columns out (then the same native contact/summary/
-    certifications projections as extract_all_op).
+    """Whole-pipeline fused Python pass: the shared per-doc kernel
+    (decode_spans + clean_and_sections) plus entity extraction in ONE
+    mapInArrow crossing, RAW spans in, final extraction columns out
+    (then native contact/summary/certifications projections).
 
-    Why this exists next to extract_all_op (native classify + pandas
-    UDF): measured at 200k docs / 32 cores, the native classify HOF tree
-    (interpreted transform/filter per span) plus the pandas_udf
-    nested-struct serialization cost ~15-16 s wall while the pure-Python
+    Why one Python pass and no native classify in front: measured at
+    200k docs / 32 cores, a native classify HOF tree (interpreted
+    transform/filter per span) plus pandas_udf nested-struct
+    serialization cost ~15-16 s wall while the pure-Python
     shared-semantics path runs ~3,000 docs/s/core warm — the plan was
     paying more to AVOID Python than the Python costs. mapInArrow hands
     whole Arrow batches to the same semantics the oracle runs
@@ -201,15 +154,12 @@ def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
     so golden parity holds by construction; the memoized fuzzy index
     (_MEMO) is module-level and survives across batches and tasks in a
     reused worker. Output carries only id + extraction columns — select
-    upstream columns you need before calling, or use the staged ops.
+    upstream columns you need before calling.
     """
     id_field = df.schema[id_col]
     out_type = T.StructType([
         T.StructField(id_col, id_field.dataType, id_field.nullable),
-        T.StructField("clean_spans", SPAN_TYPE),
-        T.StructField("blocks_kept", T.IntegerType()),
-        T.StructField("blocks_dropped", T.IntegerType()),
-        T.StructField("sections", SECTIONS_TYPE),
+        *CLEAN_FIELDS,
         T.StructField("skills", T.ArrayType(T.StringType())),
         T.StructField("education", EDUCATION_TYPE),
         T.StructField("experience", EXPERIENCE_TYPE),
@@ -220,8 +170,6 @@ def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
 
     def fused(batches):
         import pyarrow as pa
-
-        from ..oracle import classify_and_emit
 
         # bounded section-level memos (same lifetime/justification as
         # _MEMO): education/projects section TEXTS repeat heavily on
@@ -243,42 +191,9 @@ def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
 
         for b in batches:
             ids = b.column(id_col).to_pylist()
-            # span decode via FLAT child arrays: one to_pylist per
-            # primitive child + one C-speed zip, then per-doc slices of
-            # the flat dict list — measured 226 -> 80 us/doc vs
-            # ListArray.to_pylist's nested dict materialization (~12%
-            # of the whole warm per-doc budget). Null spans rows keep
-            # the None contract via the validity bitmap.
-            sc = b.column(spans_col)
-            sv = sc.values
-            flat = [
-                {"kind": k, "text": tx, "media_ref": m, "offset": o}
-                for k, tx, m, o in zip(
-                    sv.field("kind").to_pylist(),
-                    sv.field("text").to_pylist(),
-                    sv.field("media_ref").to_pylist(),
-                    sv.field("offset").to_pylist(),
-                )
-            ]
-            offs = sc.offsets.to_pylist()
-            if sc.null_count:
-                valid = [v.is_valid for v in sc]
-                spans_in = [
-                    flat[offs[i]:offs[i + 1]] if valid[i] else None
-                    for i in range(len(sc))
-                ]
-            else:
-                spans_in = [flat[offs[i]:offs[i + 1]]
-                            for i in range(len(sc))]
             cols: dict[str, list] = {f.name: [] for f in out_type.fields}
-            for did, arr in zip(ids, spans_in):
-                if arr is None:
-                    # contract pinned by the staged path: null spans ->
-                    # empty clean_spans, NULL metrics, empty sections
-                    clean, kept, dropped = [], None, None
-                else:
-                    clean, kept, dropped = classify_and_emit(arr)
-                secs = sections_of_span_list(clean)
+            for did, arr in zip(ids, decode_spans(b.column(spans_col))):
+                clean, kept, dropped, secs = clean_and_sections(arr)
                 cols[id_col].append(did)
                 cols["clean_spans"].append(clean)
                 cols["blocks_kept"].append(kept)
@@ -310,22 +225,6 @@ def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
         out.withColumn("contact", contact_struct(sec["contact"]))
         .withColumn("summary",
                     summary_col(F.coalesce(sec["summary"], F.lit(""))))
-        .withColumn(
-            "certifications",
-            split_entries_col(F.coalesce(sec["certifications"], F.lit(""))),
-        )
-    )
-
-
-def extract_resume_op(df: DataFrame, sections_col: str = "sections") -> DataFrame:
-    sec = F.col(sections_col)
-    return (
-        df.withColumn("contact", contact_struct(sec["contact"]))
-        .withColumn("summary", summary_col(F.coalesce(sec["summary"], F.lit(""))))
-        .withColumn("skills", _skills_udf(sec["skills"]))
-        .withColumn("education", _education_udf(sec["education"]))
-        .withColumn("experience", _experience_udf(sec["experience"]))
-        .withColumn("projects", _projects_udf(sec["projects"]))
         .withColumn(
             "certifications",
             split_entries_col(F.coalesce(sec["certifications"], F.lit(""))),

@@ -1,11 +1,11 @@
-"""Section-detection FSM as a vectorized pandas UDF (SURVEY §2.10 U1).
+"""Section-detection FSM over one doc's cleaned spans (SURVEY §2.10 U1).
 
 The FSM (reference parsing_engine/section_detector.py:31-107) carries
 mutable `current_section` state per line — inherently sequential *within*
-a document, so it cannot be a Catalyst expression. It IS vectorized
-*across* documents: Arrow ships a batch of span arrays to the Python
-worker, and the per-doc loop runs over plain Python lists (no per-row
-serde, no Python UDF row path).
+a document, so it cannot be a Catalyst expression. It runs inside the
+shared per-doc kernel (operators/resume.clean_and_sections), which is
+vectorized *across* documents: Arrow ships a batch of span arrays to the
+Python worker, and the per-doc loop runs over plain Python lists.
 
 Output is a fixed-field struct (not a map): fixed keys are
 Catalyst-prunable — downstream stages that only need `sections.skills`
@@ -14,11 +14,7 @@ don't deserialize the rest (SURVEY §1.4).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from .. import semantics as S
 
@@ -38,15 +34,3 @@ def sections_of_span_list(spans) -> dict:
             lines.extend((s["text"] or "").split("\n"))
     secs = S.detect_sections(lines)
     return {name: secs.get(name) for name in SECTIONS_FIELDS}
-
-
-@pandas_udf(SECTIONS_TYPE)
-def _sections_udf(spans: pd.Series) -> pd.DataFrame:
-    rows = [sections_of_span_list(arr) for arr in spans]
-    return pd.DataFrame(rows, columns=list(SECTIONS_FIELDS))
-
-
-def detect_sections_op(
-    df: DataFrame, spans_col: str = "clean_spans", out_col: str = "sections"
-) -> DataFrame:
-    return df.withColumn(out_col, _sections_udf(F.col(spans_col)))

@@ -1,7 +1,7 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All hot-path functions are native Column expressions (JVM regex, codegen);
-simhash is the one numpy-vectorized pandas UDF (bit arithmetic over token
+Hot-path functions are native Column expressions (JVM regex, codegen) or
+single mapInArrow passes (simhash_agg's numpy bit vote over token
 hashes). Each has a DuckDB-SQL-expressible twin in __spark_entry__ for the
 correctness oracle.
 
@@ -14,18 +14,16 @@ Deterministic formulas (authoritative definitions for this engine):
   lang_guess     — argmax of per-language marker-word hit counts,
                    priority en>de>fr>es>zh on ties, 'und' when all zero
   fingerprint    — md5 of lowercased whitespace-normalized text
-  simhash64      — 64-bit majority-vote over md5-derived token hashes
+  simhash        — 60-bit count-weighted majority vote over md5-derived
+                   token hashes (simhash_agg)
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..semantics import PY_WS_JRE, PY_WS_JRE_INNER
 
@@ -273,64 +271,15 @@ def _word_count_rows_arrow(df: DataFrame, id_col: str,
     )
 
 
-# bounded token->md5-hash cache: tokens repeat heavily in any natural
-# corpus and md5 per token instance was the simhash hot spot (the
-# per-bit Python loop was the other — now a numpy majority vote).
-_SIMHASH_TOKEN_CACHE: dict[str, int] = {}
-
-
-def _token_hash(tok: str) -> int:
-    h = _SIMHASH_TOKEN_CACHE.get(tok)
-    if h is None:
-        h = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
-        if len(_SIMHASH_TOKEN_CACHE) > 500_000:
-            _SIMHASH_TOKEN_CACHE.clear()
-        _SIMHASH_TOKEN_CACHE[tok] = h
-    return h
-
-
-def _simhash64(text: str) -> int:
-    """64-bit simhash: per-token md5-derived 64-bit hash, majority vote
-    per bit. Deterministic, library-free. Vectorized: the previous
-    per-token 64-iteration Python bit loop was ~100% of the simhash
-    operator's cost; the numpy form computes the bit matrix for the
-    whole doc at once (values unchanged — majority means 2*ones > n)."""
-    if not text:
-        return 0
-    toks = text.split()
-    if not toks:
-        return 0
-    import numpy as np
-
-    hs = np.fromiter((_token_hash(t) for t in toks), dtype=np.uint64,
-                     count=len(toks))
-    bits = (hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
-    ones = bits.sum(axis=0)
-    out = int(np.bitwise_or.reduce(
-        (np.uint64(1) << np.arange(64, dtype=np.uint64))[2 * ones > len(toks)],
-        initial=np.uint64(0),
-    ))
-    # wrap to signed int64 for Spark LongType
-    return out - (1 << 64) if out >= (1 << 63) else out
-
-
-@pandas_udf(T.LongType())
-def simhash64_udf(text: pd.Series) -> pd.Series:
-    return text.apply(lambda t: _simhash64(t or ""))
-
-
-def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("simhash", simhash64_udf(F.col(text_col)))
-
-
 def hamming64_col(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
 SIMHASH_BITS = 60  # 60-bit fits signed int64 on both engines with headroom
 
-# token -> 60-bit hash cache for simhash_agg (same rationale as
-# _SIMHASH_TOKEN_CACHE above; different width contract).
+# bounded token -> 60-bit hash cache for simhash_agg: tokens repeat
+# heavily in any natural corpus and md5 per token instance was the
+# simhash hot spot.
 _SIMHASH60_CACHE: dict[str, int] = {}
 
 

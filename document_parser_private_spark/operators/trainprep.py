@@ -70,7 +70,8 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
     CSE, PLANS.md §21/§23) with 2 grouped exchanges and 2 joins.
     Value contracts preserved exactly: split on '\\n' only (not
     splitlines), char counts via len() == Spark length(), the bigram
-    tie-break compares UTF-8 byte order == Python code-point order,
+    tie-break compares the joined 'w1 w2' strings (as the relational
+    form does) in UTF-8 byte order == Python code-point order,
     and the three round(…, 6) calls replicate Spark's
     Round(HALF_UP over BigDecimal.valueOf) via Decimal(repr(x)) — the
     same contract the textstats batch pass pins.
@@ -109,9 +110,9 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
                 bg = Counter(zip(t, t[1:]))
                 n_bigrams = sum(bg.values())
                 if bg:
-                    neg, (w1, w2) = min(
-                        (-c, g) for g, c in bg.items())
-                    top_bigram, top_cnt = f"{w1} {w2}", -neg
+                    neg, top_bigram = min(
+                        (-c, f"{w1} {w2}") for (w1, w2), c in bg.items())
+                    top_cnt = -neg
                 else:
                     top_bigram, top_cnt = "", 0
                 o_nl.append(n_lines)

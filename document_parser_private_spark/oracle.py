@@ -3,16 +3,17 @@
 Computes, per document, the golden expected outputs the Spark pipeline must
 match (BASELINE.json per-row invariant: span-sequence equality on
 (kind, text, media_ref, order)). Shares the deterministic core with the
-pandas-UDF stages via ``semantics`` so behavior is defined exactly once;
-the *native-Spark* stages (layout sort, boilerplate classification, regex
+pipeline's per-doc kernel via ``semantics`` (the kernel calls
+classify_and_emit below), so behavior is defined exactly once; the
+*native-Spark* stages (contact / summary / certifications regex
 extraction) are independent implementations tested against this oracle.
 
 Stages (mirrors plans/pipeline.py):
-  1. layout: sort spans by `offset` ascending (reading order; see
-     corpus.py offset contract)
-  2. classify: media-anchor / boilerplate / content; drop boilerplate
-  3. re-emit spans with offsets renumbered 0..n-1 in reading order;
+  1. classify: media-anchor / boilerplate / content; drop boilerplate;
      image spans become kind='media-anchor'
+  2. layout inference over the kept spans (reading order; see corpus.py
+     offset contract)
+  3. re-emit spans with offsets renumbered 0..n-1 in reading order
   4. section FSM over kept textual spans
   5. resume entity extraction (deterministic regex path)
 """

@@ -2,16 +2,19 @@
 
     documents(doc_id, spans, [byte_size, part])
       -> salted repartition by doc byte-size bucket   (skew)
-      -> reading-order sort                            (native, narrow)
-      -> classify content/boilerplate/media-anchor     (native, narrow)
-      -> section FSM                                   (pandas UDF, narrow)
-      -> per-section entity extraction                 (native + UDF, narrow)
+      -> ONE mapInArrow pass per doc:                  (Python, narrow)
+           classify content/boilerplate/media-anchor,
+           layout inference + offset renumbering,
+           section FSM, skills/education/experience/projects
+      -> contact / summary / certifications           (native, narrow)
 
 After the single up-front repartition the whole pipeline is narrow — no
 further shuffle at any scale; throughput scales linearly with executors
 (the ≥0.8 N->4N efficiency target). Skew from giant PDFs is handled by
 routing heavy docs (byte_size above threshold) across dedicated hash
-buckets so no single task owns several giants.
+buckets so no single task owns several giants. streaming.stream_extract
+runs the same per-doc kernel (operators/resume.clean_and_sections)
+without the entity columns.
 """
 
 from __future__ import annotations
@@ -19,10 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.classify import classify_spans
-from ..operators.layout import layout_order_op
-from ..operators.resume import extract_all_fused_op, extract_all_op  # noqa: F401 (extract_all_op re-exported for the staged path)
-from ..operators.sections import detect_sections_op
+from ..operators.resume import extract_all_fused_op
 
 HEAVY_BYTES = 8 * 1024  # ~3x the mean doc: above this, the giant-doc salt
 HEAVY_BUCKETS = 16
@@ -76,11 +76,10 @@ def repartition_salted(
 def extract_pipeline(
     df: DataFrame,
     num_partitions: int | None = None,
-    with_resume: bool = True,
     repartition: bool = True,
 ) -> DataFrame:
     """Full pipeline; returns one row per doc with clean spans, sections,
-    extraction metrics columns, and (optionally) resume entities.
+    extraction metrics columns and resume entities (FINAL_COLUMNS).
 
     repartition=False skips the salted exchange for inputs whose STORAGE
     is already salt-bucketed (the 100 TB deployment writes the documents
@@ -89,40 +88,7 @@ def extract_pipeline(
     pipeline is one narrow stage). Keep the default for ad-hoc inputs.
     """
     out = repartition_salted(df, num_partitions) if repartition else df
-    if with_resume:
-        # ONE mapInArrow crossing runs the ENTIRE per-doc pipeline
-        # (classify + layout + FSM + entities) on raw spans via the
-        # shared oracle semantics. The previous shape (native classify
-        # HOF -> pandas UDF) paid interpreted higher-order-function
-        # evaluation per span plus pandas nested-struct serialization;
-        # measured at 200k docs/32 cores it was ~2x slower than this
-        # batch-Arrow form (see operators/resume.extract_all_fused_op).
-        out = extract_all_fused_op(out)
-        return out.select(*FINAL_COLUMNS)
-    # staged path: classify is per-span and order-free, so it runs FIRST,
-    # natively (whole-stage codegen), keeping original geometric offsets.
-    # barrier=True: clean_spans feeds a Python UDF — see classify_spans.
-    out = classify_spans(out, renumber=False, barrier=True)
-    out = layout_order_op(out)
-    out = detect_sections_op(out)
-    return out.select(
-        "doc_id", "clean_spans", "blocks_kept", "blocks_dropped", "sections"
-    )
-
-
-def extraction_metrics(result: DataFrame, part_col: str | None = None) -> DataFrame:
-    """A6 metrics side table: per-partition doc/block counters
-    (north_rule's extraction-metric side table)."""
-    keys = [part_col] if part_col and part_col in result.columns else []
-    agg = result.groupBy(*keys).agg(
-        F.count("*").alias("doc_count"),
-        F.sum("blocks_kept").alias("blocks_kept"),
-        F.sum("blocks_dropped").alias("blocks_dropped"),
-        F.sum(F.when(F.col("blocks_kept") == 0, 1).otherwise(0)).alias(
-            "empty_docs"
-        ),
-    )
-    return agg
+    return extract_all_fused_op(out).select(*FINAL_COLUMNS)
 
 
 # Export schema = the reference Resume model (schemas/resume_schema.py:
@@ -157,7 +123,7 @@ def resume_json_col() -> "F.Column":
     to_json -> from_json(export schema) -> to_json round trip, NOT an
     array transform() — Spark cannot evaluate a Python UDF that the
     optimizer has inlined under a higher-order-function lambda, and the
-    pipeline's entity arrays come out of the fused pandas UDF.
+    pipeline's entity arrays come out of the fused Python pass.
     ignoreNullFields=false so nulls serialize explicitly like Python's
     json.dumps(None) -> null; dates render ISO yyyy-MM-dd.
     """

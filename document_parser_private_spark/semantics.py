@@ -277,20 +277,19 @@ def detect_sections(lines: list[str]) -> dict[str, str]:
 # The reference has no boilerplate stripper (it parses single resumes); the
 # north_star mandates one (Boilerpipe/Readability-style link-density +
 # block-tag scoring). These rules are therefore defined HERE as the
-# authoritative semantics, implemented natively in Spark (operators/
-# classify.py) and mirrored by the oracle. Every rule is a deterministic
-# regex/ratio on the span text.
+# authoritative semantics, run by the extraction kernel (operators/
+# resume.clean_and_sections, batch and streaming) and by the oracle through
+# the same classify_span. Every rule is a deterministic regex/ratio on the
+# span text.
 
-# Pattern SOURCE STRINGS shared verbatim with the JVM side
-# (operators/classify.py). Constraints that keep one string valid and
-# equivalent on both engines:
-#   - compiled with re.ASCII in Python so \s \S \d \w \b match Java/RE2
-#     defaults (ASCII); the classification token syntax is intentionally
-#     ASCII — see the whitespace contract above;
-#   - `.` is spelled [^\n] because Python-dot excludes only \n while
-#     Java-dot also excludes \r, \x85, U+2028, U+2029;
-#   - input is pre-stripped with the FULL Python whitespace set on both
-#     sides, so the ^\s*/\s*$ anchoring never sees exotic whitespace.
+# Pattern constraints:
+#   - compiled with re.ASCII so \s \S \d \w \b are the ASCII classes;
+#     the classification token syntax is intentionally ASCII — see the
+#     whitespace contract above;
+#   - `.` is spelled [^\n] (Python-dot excludes only \n), so a JVM-regex
+#     port of a pattern keeps the same meaning;
+#   - input is pre-stripped with the FULL Python whitespace set, so the
+#     ^\s*/\s*$ anchoring never sees exotic whitespace.
 PAGE_FURNITURE_PAT = (
     r"(?i)^\s*("
     r"page\s+\d+(\s+of\s+\d+)?"  # Page 3 of 12
@@ -404,7 +403,15 @@ _QUARTER_RE = re.compile(r"(?i)\bQ([1-4])\s*(\d{4})\b")
 _ISO_RE = re.compile(r"^(\d{4})-(\d{2})-(\d{2})$")
 _DMY_RE = re.compile(r"^(\d{2})-(\d{2})-(\d{4})$")
 _MDY_RE = re.compile(r"^(\d{1,2})/(\d{1,2})/(\d{4})$")
-_MONTH_YEAR_RE = re.compile(r"(?i)([a-z]+)[^\d]*(\d{4})")
+# Same matches as the plain (?i)([a-z]+)[^\d]*(\d{4}), in linear time:
+# that form backtracks cubically over a long letter run with no year
+# after it. A match can only succeed at the FIRST letter after a digit
+# run (or the string start) and must take the whole letter run and the
+# rest of its non-digit segment, so an attempt starts only at the
+# string start or right after a digit and never backtracks (possessive
+# quantifiers): each segment is scanned once.
+_MONTH_YEAR_RE = re.compile(
+    r"(?i)(?:^|(?<=\d))[^a-z\d]*+([a-z]++)[^\d]*+(\d{4})")
 _NUM_MONTH_YEAR_RE = re.compile(r"(\d{1,2})[^\d]*(\d{4})")
 _YEAR_RE = re.compile(r"(\d{4})")
 

@@ -2,12 +2,12 @@
 
 The reference is strictly batch (SURVEY §2.9) and the north_rule targets
 batch Iceberg snapshots, but the extraction transforms are all narrow
-per-document maps — so the identical operator chain runs unchanged as a
-streaming query (`readStream` on a documents directory → transforms →
-`writeStream`). This module exists to prove that property and to provide
-the micro-batch ingestion path a continuously-fed 100 TB corpus would
-use (file-source backpressure via maxFilesPerTrigger; exactly-once via
-the streaming checkpoint + idempotent sink).
+per-document maps — so the batch pipeline's per-doc kernel runs unchanged
+in a streaming query (`readStream` on a documents directory → kernel →
+`writeStream`). This module provides the micro-batch ingestion path a
+continuously-fed 100 TB corpus would use (file-source backpressure via
+maxFilesPerTrigger; exactly-once via the streaming checkpoint +
+idempotent sink).
 
 Also includes the canonical event-time windowed aggregation with
 watermark (late-data handling) over an events stream.
@@ -15,13 +15,32 @@ watermark (late-data handling) over an events stream.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..corpus import DOCS_DDL
-from ..operators.classify import classify_spans
-from ..operators.layout import layout_order_op
-from ..operators.sections import detect_sections_op
+from ..operators.resume import CLEAN_FIELDS, clean_and_sections, decode_spans
+
+_CLEAN_TYPE = T.StructType(CLEAN_FIELDS)
+_CLEAN_ARROW = to_arrow_type(_CLEAN_TYPE)
+
+
+@arrow_udf(_CLEAN_TYPE)
+def _clean_and_sections_udf(spans: pa.Array) -> pa.Array:
+    """The batch kernel (decode_spans + clean_and_sections) as a scalar
+    Arrow UDF: one Python node, no entity extraction."""
+    cols: list[list] = [[] for _ in CLEAN_FIELDS]
+    for arr in decode_spans(spans):
+        for col, v in zip(cols, clean_and_sections(arr)):
+            col.append(v)
+    return pa.StructArray.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, _CLEAN_ARROW)],
+        fields=list(_CLEAN_ARROW),
+    )
 
 
 def stream_extract(
@@ -29,7 +48,8 @@ def stream_extract(
     input_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """readStream(documents dir) -> layout -> classify -> sections.
+    """readStream(documents dir) -> classify -> layout -> sections, via
+    the batch pipeline's per-doc kernel (operators/resume.py).
 
     No shuffle anywhere: every micro-batch is a pure narrow map, so the
     query needs no state store and sustains source-rate throughput.
@@ -40,12 +60,8 @@ def stream_extract(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.load(input_dir)
-    out = detect_sections_op(
-        layout_order_op(classify_spans(docs, renumber=False))
-    )
-    return out.select(
-        "doc_id", "clean_spans", "blocks_kept", "blocks_dropped", "sections"
-    )
+    out = docs.select("doc_id", _clean_and_sections_udf("spans").alias("_k"))
+    return out.select("doc_id", "_k.*")
 
 
 def run_stream_to_parquet(

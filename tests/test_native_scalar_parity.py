@@ -15,7 +15,8 @@ from document_parser_private_spark.functions.contact import contact_struct
 
 DATES = ["Sep 2020", "September 2020", "Q1 2023", "Q4 2019", "2024",
          "May2023", "05/2021", "2020-07-15", "Present", "current",
-         "", "no date", "(2019-2023)", "  Jan 2001  "]
+         "", "no date", "(2019-2023)", "  Jan 2001  ",
+         "x" * 2000, "ab 12 cd 2020", "1 - 22 Mar, 2019", "Q 2020 June"]
 DEGREES = ["B.S.", "MBA", "Masters of Business Admin", "BSc Computer Science",
            "MS in Computer Science", "PhD", "Engineering Degree", "", "x"]
 TITLES = ["Sr. SWE", "Sr SWE", "Jr. Dev", "Tech Lead", "VP", "SWE",

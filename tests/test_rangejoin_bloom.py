@@ -88,7 +88,8 @@ def test_bloom_no_false_negatives_and_exact_positions(spark):
     m, k = 512, 3
     keys = spark.createDataFrame([(x,) for x in range(0, 200, 2)],
                                  "key long")
-    probe = spark.createDataFrame([(x,) for x in range(200)], "key long")
+    probe = spark.createDataFrame([(x,) for x in range(200)] + [(None,)],
+                                  "key long")
     bloom = bloom_build(keys, "key", m_bits=m, k=k)
     # position table matches the pure-python md5 contract exactly
     got_pos = sorted(r.pos for r in bloom.collect())
@@ -99,6 +100,8 @@ def test_bloom_no_false_negatives_and_exact_positions(spark):
     out = {r.key: r.bloom_pass
            for r in bloom_prune(probe, "key", bloom, m_bits=m, k=k).collect()}
     members = set(range(0, 200, 2))
+    # a null key fails the filter
+    assert out.pop(None) == 0
     # no false negatives
     assert all(out[x] == 1 for x in members)
     # false positives are exactly the python-reference predictions

@@ -34,6 +34,37 @@ def test_normalize_date(raw, expected):
     assert S.normalize_date(raw) == expected
 
 
+def test_normalize_date_letter_run_is_linear():
+    """A long letter run with no year after it once cost cubic time in
+    the month-name + year regex (500 chars took about 1 s)."""
+    import time
+
+    t0 = time.perf_counter()
+    assert S.normalize_date("x" * 100_000) is None
+    assert time.perf_counter() - t0 < 0.1
+
+
+def test_month_year_regex_matches_plain_form():
+    """Property: the linear month-name + year regex finds the same groups
+    as the plain backtracking form on short strings (case-folding
+    letters such as U+017F and U+212A included)."""
+    import re
+    from hypothesis import given, settings, strategies as st
+
+    plain = re.compile(r"(?i)([a-z]+)[^\d]*(\d{4})")
+
+    @settings(max_examples=500, deadline=None)
+    @given(st.text(alphabet="ab xZ-/.,\n0123456789"
+                            "\u017f\u212a\u0130\u0131\u00e9\u0663",
+                   max_size=16))
+    def prop(text):
+        got = S._MONTH_YEAR_RE.search(text)
+        want = plain.search(text)
+        assert (got and got.groups()) == (want and want.groups())
+
+    prop()
+
+
 @pytest.mark.parametrize(
     "text,start,end",
     [

@@ -10,10 +10,13 @@ from document_parser_private_spark.streaming.stream import (
 
 
 def test_stream_matches_batch(spark, tmp_path):
+    """The stream sink equals extract_pipeline on the same corpus, and
+    both plans run the one per-doc kernel: the stream through a single
+    ArrowEvalPython node with no higher-order functions over spans, the
+    batch through a single MapInArrow node."""
     from pyspark.sql import functions as F
-    from document_parser_private_spark.operators.classify import classify_spans
-    from document_parser_private_spark.operators.layout import layout_order_op
-    from document_parser_private_spark.operators.sections import detect_sections_op
+    from document_parser_private_spark.plans.pipeline import extract_pipeline
+    from document_parser_private_spark.streaming.stream import stream_extract
 
     in_dir = str(tmp_path / "in")
     write_corpus_parquet(in_dir, n=60, seed=9, shards=4)
@@ -21,24 +24,36 @@ def test_stream_matches_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     run_stream_to_parquet(spark, in_dir, out_dir, ckpt)
+    cols = ("blocks_kept", "blocks_dropped", "clean_spans_json",
+            "sections_json")
     streamed = {
-        r["doc_id"]: (r["blocks_kept"], r["clean_spans_json"])
+        r["doc_id"]: tuple(r[c] for c in cols)
         for r in spark.read.parquet(out_dir).collect()
     }
 
-    batch_df = detect_sections_op(
-        layout_order_op(classify_spans(spark.read.parquet(in_dir),
-                                       renumber=False))
-    ).select(
-        "doc_id", "blocks_kept",
-        F.to_json("clean_spans").alias("clean_spans_json"),
-    )
+    batch_df = extract_pipeline(spark.read.parquet(in_dir), num_partitions=4)
     batch = {
-        r["doc_id"]: (r["blocks_kept"], r["clean_spans_json"])
-        for r in batch_df.collect()
+        r["doc_id"]: tuple(r[c] for c in cols)
+        for r in batch_df.select(
+            "doc_id", "blocks_kept", "blocks_dropped",
+            F.to_json("clean_spans").alias("clean_spans_json"),
+            F.to_json("sections").alias("sections_json"),
+        ).collect()
     }
     assert streamed == batch
     assert len(streamed) == 60
+
+    q = (
+        stream_extract(spark, in_dir).writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt_plan"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    stream_plan = q._jsq.explainInternal(False)
+    assert stream_plan.count("ArrowEvalPython") == 1, stream_plan
+    assert "lambdafunction" not in stream_plan, stream_plan
+    batch_plan = batch_df._jdf.queryExecution().optimizedPlan().toString()
+    assert batch_plan.count("MapInArrow") == 1, batch_plan
 
 
 def test_windowed_event_counts(spark):

@@ -65,6 +65,7 @@ REP_DOCS = [
     (3, "hello"),                   # single token -> no bigrams
     (4, "x y\nz w"),                # all-tie bigrams -> lexicographic min
     (5, "\n\nonly\n\n"),            # empty lines excluded
+    (6, "a z a\x01 b"),            # tie broken on the joined string
 ]
 
 
@@ -81,6 +82,7 @@ def test_repetition_stats_handcrafted(spark):
     assert got[1]["top_bigram_frac"] == 0.4
     assert got[4]["top_bigram"] == "x y"
     assert got[5]["n_lines"] == 1
+    assert got[6]["top_bigram"] == "a\x01 b"
 
 
 def _rand_docs(n, seed=11):

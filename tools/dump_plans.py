@@ -2,7 +2,11 @@
 
 Usage: python tools/dump_plans.py OUT_DIR SUFFIX [query ...]
 Writes OUT_DIR/<query>_<SUFFIX>.txt for each query (all queries when
-none given). Plan-only — nothing executes.
+none given). The final action of a query never runs, but building it
+can: queries that checkpoint an intermediate eagerly (localCheckpoint —
+e.g. lm_score, bm25_terms, cm_heavy_hitters, minhash_candidates) and
+bloom_prune's plan-time collect() execute those parts at the chosen
+scale factor (SPARK_GRAFT_SF_DIR, default sf0.1).
 """
 
 from __future__ import annotations
