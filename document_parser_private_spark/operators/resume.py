@@ -5,9 +5,10 @@
     batch pass below and streaming.stream_extract: Arrow span decode,
     then classify + layout + section FSM via the oracle's semantics
   extract_all_fused_op — the batch pipeline's ONE mapInArrow crossing:
-    the kernel plus skills / education / experience / projects over the
-    section texts (fuzzy ontology normalization + sequential entry
-    parsing)
+    the kernel plus doc_entities (skills / education / experience /
+    projects over the section texts: fuzzy ontology normalization +
+    sequential entry parsing); carried columns such as `part` pass
+    through untouched
   contact / summary / certifications — pure Catalyst expressions over
     the returned sections struct
   _education_udf / _experience_udf — the entry parsers as standalone
@@ -41,8 +42,10 @@ from .layout import SPAN_TYPE
 from .sections import SECTIONS_TYPE, sections_of_span_list
 
 _LOWER, _V2C, _INDEX = build_skill_index(SKILLS_ONTOLOGY)
-# phrase-level fuzzy memo, shared across Arrow batches within the Python
-# worker (bounded; see semantics.normalize_skill)
+# phrase-level fuzzy memo (bounded; see semantics.normalize_skill). It
+# lives as long as the Python worker process, across batches and across
+# the tasks a reused worker runs, because only module-level functions
+# read it (doc_entities explains why that matters).
 _MEMO: dict = {}
 
 EDUCATION_TYPE = T.ArrayType(T.StructType([
@@ -76,17 +79,59 @@ def _education_udf(text: pd.Series) -> pd.Series:
     return text.apply(lambda t: S.extract_education_entries(t or ""))
 
 
+def _experience_entries(text: str) -> list:
+    """Experience entries of one section text, skills normalized through
+    the worker-lifetime _MEMO."""
+    return S.extract_experience_entries(
+        text, skill_lower_index=_LOWER, skill_var2canon=_V2C,
+        skill_index=_INDEX, memo=_MEMO)
+
+
+def _project_entries(text: str) -> list:
+    return S.extract_project_entries(
+        text, skill_lower_index=_LOWER, skill_var2canon=_V2C,
+        skill_index=_INDEX, memo=_MEMO)
+
+
+def _memoed(memo: dict, key: str, fn):
+    hit = memo.get(key)
+    if hit is None and key not in memo:
+        hit = fn(key)
+        if len(memo) > 50_000:
+            memo.clear()
+        memo[key] = hit
+    return hit
+
+
+def doc_entities(secs: dict, edu_memo: dict, proj_memo: dict) -> tuple:
+    """One doc's sections -> (skills, education, experience, projects).
+
+    Module-level on purpose: cloudpickle ships a nested function BY
+    VALUE, with private copies of the globals it names, so a kernel that
+    read _MEMO directly would start every task with an empty fuzzy memo.
+    A module-level function is pickled by reference and resolves _MEMO
+    in the worker's imported module, where it lives as long as the
+    reused Python worker.
+
+    edu_memo / proj_memo are the caller's section-level memos (one per
+    task): education/projects section TEXTS repeat heavily on
+    template-shaped corpora (measured 41%/50% distinct across 4k docs)
+    and the extractors are pure functions of the text, so a
+    content-keyed dict skips the whole parse on a repeat; on corpora
+    with no repeats the cost is one dict miss per doc."""
+    return (
+        S.extract_skills(secs.get("skills") or "", _LOWER, _V2C, _INDEX,
+                         memo=_MEMO),
+        _memoed(edu_memo, secs.get("education") or "",
+                S.extract_education_entries),
+        _experience_entries(secs.get("experience") or ""),
+        _memoed(proj_memo, secs.get("projects") or "", _project_entries),
+    )
+
+
 @pandas_udf(EXPERIENCE_TYPE)
 def _experience_udf(text: pd.Series) -> pd.Series:
-    return text.apply(
-        lambda t: S.extract_experience_entries(
-            t or "",
-            skill_lower_index=_LOWER,
-            skill_var2canon=_V2C,
-            skill_index=_INDEX,
-            memo=_MEMO,
-        )
-    )
+    return text.apply(lambda t: _experience_entries(t or ""))
 
 
 # The kernel's output columns, in order (batch adds the id and entities).
@@ -137,11 +182,13 @@ def clean_and_sections(spans) -> tuple:
 
 
 def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
-                         id_col: str = "doc_id") -> DataFrame:
+                         id_col: str = "doc_id",
+                         carry: tuple[str, ...] = ()) -> DataFrame:
     """Whole-pipeline fused Python pass: the shared per-doc kernel
-    (decode_spans + clean_and_sections) plus entity extraction in ONE
-    mapInArrow crossing, RAW spans in, final extraction columns out
-    (then native contact/summary/certifications projections).
+    (decode_spans + clean_and_sections) plus entity extraction
+    (doc_entities) in ONE mapInArrow crossing, RAW spans in, final
+    extraction columns out (then native contact/summary/certifications
+    projections).
 
     Why one Python pass and no native classify in front: measured at
     200k docs / 32 cores, a native classify HOF tree (interpreted
@@ -153,12 +200,18 @@ def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
     (guide: do the heavy lifting in native/batch code inside the UDF),
     so golden parity holds by construction; the memoized fuzzy index
     (_MEMO) is module-level and survives across batches and tasks in a
-    reused worker. Output carries only id + extraction columns — select
-    upstream columns you need before calling.
+    reused worker (see doc_entities).
+
+    Output carries the id, the `carry` columns and the extraction
+    columns. Carried columns cross as their input Arrow arrays, which
+    Python hands back untouched (e.g. the checkpoint's `part`, so no
+    join back to the input is needed); select any other upstream column
+    you need before calling.
     """
     id_field = df.schema[id_col]
     out_type = T.StructType([
         T.StructField(id_col, id_field.dataType, id_field.nullable),
+        *(df.schema[c] for c in carry),
         *CLEAN_FIELDS,
         T.StructField("skills", T.ArrayType(T.StringType())),
         T.StructField("education", EDUCATION_TYPE),
@@ -167,59 +220,36 @@ def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
     ])
     from pyspark.sql.pandas.types import to_arrow_schema
     pa_schema = to_arrow_schema(out_type)
+    computed = [f for f in pa_schema if f.name not in carry]
 
     def fused(batches):
         import pyarrow as pa
 
-        # bounded section-level memos (same lifetime/justification as
-        # _MEMO): education/projects section TEXTS repeat heavily on
-        # template-shaped corpora (measured 41%/50% distinct across 4k
-        # docs) and the extractors are pure functions of the text, so a
-        # content-keyed dict skips the whole parse on a repeat; on
-        # corpora with no repeats the cost is one dict miss per doc.
         edu_memo: dict = {}
         proj_memo: dict = {}
-
-        def memoed(memo, key, fn):
-            hit = memo.get(key)
-            if hit is None and key not in memo:
-                hit = fn(key)
-                if len(memo) > 50_000:
-                    memo.clear()
-                memo[key] = hit
-            return hit
-
         for b in batches:
-            ids = b.column(id_col).to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in out_type.fields}
-            for did, arr in zip(ids, decode_spans(b.column(spans_col))):
+            cols: dict[str, list] = {f.name: [] for f in computed}
+            cols[id_col] = b.column(id_col).to_pylist()
+            for arr in decode_spans(b.column(spans_col)):
                 clean, kept, dropped, secs = clean_and_sections(arr)
-                cols[id_col].append(did)
+                skills, edu, exp, proj = doc_entities(secs, edu_memo,
+                                                      proj_memo)
                 cols["clean_spans"].append(clean)
                 cols["blocks_kept"].append(kept)
                 cols["blocks_dropped"].append(dropped)
                 cols["sections"].append(secs)
-                cols["skills"].append(S.extract_skills(
-                    secs.get("skills") or "", _LOWER, _V2C, _INDEX,
-                    memo=_MEMO))
-                cols["education"].append(memoed(
-                    edu_memo, secs.get("education") or "",
-                    S.extract_education_entries))
-                cols["experience"].append(S.extract_experience_entries(
-                    secs.get("experience") or "",
-                    skill_lower_index=_LOWER, skill_var2canon=_V2C,
-                    skill_index=_INDEX, memo=_MEMO))
-                cols["projects"].append(memoed(
-                    proj_memo, secs.get("projects") or "",
-                    lambda t: S.extract_project_entries(
-                        t, skill_lower_index=_LOWER, skill_var2canon=_V2C,
-                        skill_index=_INDEX, memo=_MEMO)))
+                cols["skills"].append(skills)
+                cols["education"].append(edu)
+                cols["experience"].append(exp)
+                cols["projects"].append(proj)
             yield pa.record_batch(
-                [pa.array(cols[f.name], type=f.type) for f in pa_schema],
+                [b.column(f.name) if f.name in carry
+                 else pa.array(cols[f.name], type=f.type)
+                 for f in pa_schema],
                 schema=pa_schema,
             )
 
-    out = df.select(id_col, spans_col).mapInArrow(fused, out_type)
+    out = df.select(id_col, *carry, spans_col).mapInArrow(fused, out_type)
     sec = F.col("sections")
     return (
         out.withColumn("contact", contact_struct(sec["contact"]))

@@ -5,7 +5,8 @@
       -> ONE mapInArrow pass per doc:                  (Python, narrow)
            classify content/boilerplate/media-anchor,
            layout inference + offset renumbering,
-           section FSM, skills/education/experience/projects
+           section FSM, skills/education/experience/projects;
+           `part`, when present, crosses as an untouched Arrow column
       -> contact / summary / certifications           (native, narrow)
 
 After the single up-front repartition the whole pipeline is narrow — no
@@ -79,7 +80,9 @@ def extract_pipeline(
     repartition: bool = True,
 ) -> DataFrame:
     """Full pipeline; returns one row per doc with clean spans, sections,
-    extraction metrics columns and resume entities (FINAL_COLUMNS).
+    extraction metrics columns and resume entities (FINAL_COLUMNS), plus
+    the input's `part` when it has one (plans.checkpoint partitions its
+    output by it without joining back to the input).
 
     repartition=False skips the salted exchange for inputs whose STORAGE
     is already salt-bucketed (the 100 TB deployment writes the documents
@@ -88,7 +91,9 @@ def extract_pipeline(
     pipeline is one narrow stage). Keep the default for ad-hoc inputs.
     """
     out = repartition_salted(df, num_partitions) if repartition else df
-    return extract_all_fused_op(out).select(*FINAL_COLUMNS)
+    carry = ("part",) if "part" in df.columns else ()
+    return extract_all_fused_op(out, carry=carry).select(*FINAL_COLUMNS,
+                                                         *carry)
 
 
 # Export schema = the reference Resume model (schemas/resume_schema.py:

@@ -2,9 +2,14 @@
 assert only pending partitions are processed and final output is
 identical to an uninterrupted run."""
 
+import os
+from collections import defaultdict
+
 import pytest
 
+from document_parser_private_spark.oracle import expected_rows
 from document_parser_private_spark.plans.checkpoint import (
+    _lineage_done,
     run_with_checkpoint,
 )
 
@@ -110,3 +115,130 @@ def test_checkpoint_forces_dynamic_overwrite(spark, corpus_df, tmp_path):
         assert len(_collect_extracted(spark, out)) == corpus_df.count()
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+def _last_execution_id(spark) -> int:
+    store = spark._jsparkSession.sharedState().statusStore()
+    it = store.executionsList().iterator()
+    last = -1
+    while it.hasNext():
+        last = max(last, it.next().executionId())
+    return last
+
+
+def _plan_node_names(spark, after_id: int) -> dict[int, list[str]]:
+    """Plan-graph node names of every SQL execution with id > after_id,
+    read from the SQL status store once the listener bus has drained."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    out = {}
+    it = store.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > after_id:
+            nodes = store.planGraph(e.executionId()).allNodes().iterator()
+            names = []
+            while nodes.hasNext():
+                names.append(nodes.next().name().strip())
+            out[e.executionId()] = names
+    return out
+
+
+def _job_descriptions(spark, after_job: int) -> dict[int, str | None]:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    out = {}
+    it = store.jobsList(None).iterator()
+    while it.hasNext():
+        j = it.next()
+        if j.jobId() > after_job:
+            d = j.description()
+            out[j.jobId()] = d.get() if d.isDefined() else None
+    return out
+
+
+@pytest.fixture(scope="module")
+def traced_run(spark, corpus_df, tmp_path_factory):
+    """One run over 8 parts with parts_per_commit=3 (3 commit groups),
+    under a caller's own job description, with the SQL plans and job
+    descriptions it left in the status stores."""
+    out = str(tmp_path_factory.mktemp("traced") / "out")
+    sc = spark.sparkContext
+    after_exec = _last_execution_id(spark)
+    after_job = max(_job_descriptions(spark, -1), default=-1)
+    sc.setJobDescription("caller's label")
+    try:
+        res = run_with_checkpoint(corpus_df, out, parts_per_commit=3)
+        description_after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setJobDescription(None)
+    return {
+        "out": out,
+        "run_id": res["run_id"],
+        "plans": _plan_node_names(spark, after_exec),
+        "jobs": _job_descriptions(spark, after_job),
+        "description_after": description_after,
+    }
+
+
+def test_metrics_and_lineage_counts_match_oracle(spark, corpus_rows,
+                                                 traced_run):
+    """Each part's metrics row sums the oracle's per-doc counts, and its
+    lineage row carries the part's input doc count."""
+    want = defaultdict(lambda: [0, 0, 0])
+    for row, exp in zip(corpus_rows, expected_rows(corpus_rows)):
+        w = want[row["part"]]
+        w[0] += 1
+        w[1] += exp["blocks_kept"]
+        w[2] += exp["blocks_dropped"]
+    out = traced_run["out"]
+    metrics = {
+        r["part"]: [r["doc_count"], r["blocks_kept"], r["blocks_dropped"]]
+        for r in spark.read.parquet(f"{out}/metrics").collect()
+    }
+    assert metrics == dict(want)
+    lineage = {
+        r["part"]: r["doc_count"]
+        for r in spark.read.parquet(f"{out}/lineage").collect()
+    }
+    assert lineage == {p: w[0] for p, w in want.items()}
+
+
+def test_one_kernel_pass_per_commit_group_and_no_join(traced_run):
+    plans = traced_run["plans"]
+    kernel_runs = [i for i, names in plans.items()
+                   if any(n.startswith("MapInArrow") for n in names)]
+    assert len(kernel_runs) == 3, plans
+    joins = [n for names in plans.values() for n in names if "Join" in n]
+    assert joins == [], plans
+
+
+def test_commit_group_jobs_are_labelled(traced_run):
+    """Every job of a commit group carries its label; jobs outside the
+    groups keep the caller's description, which the run restores."""
+    rid = traced_run["run_id"]
+    labels = {
+        f"checkpoint run={rid} parts={g}"
+        for g in ([0, 1, 2], [3, 4, 5], [6, 7])
+    }
+    seen = set(traced_run["jobs"].values())
+    assert labels <= seen
+    assert seen <= labels | {"caller's label"}
+    assert traced_run["description_after"] == "caller's label"
+
+
+def test_broken_ledger_is_not_read_as_empty(spark, corpus_df, tmp_path):
+    """A corrupt lineage file must fail the run, not make it recompute
+    every part as if nothing were done; a ledger whose first append was
+    killed before committing a file is empty."""
+    out = tmp_path / "broken"
+    (out / "lineage").mkdir(parents=True)
+    (out / "lineage" / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_with_checkpoint(corpus_df, str(out), parts_per_commit=3)
+    assert not os.path.exists(out / "extracted")
+
+    killed = tmp_path / "killed_first_append"
+    (killed / "lineage" / "_temporary" / "0").mkdir(parents=True)
+    assert _lineage_done(spark, str(killed)) == set()
+    assert _lineage_done(spark, str(tmp_path / "missing")) == set()

@@ -129,3 +129,22 @@ def test_education_experience_projects(spark, corpus_rows, result_by_id):
             assert g["name"] == x["name"], doc_id
             assert g["description"] == x["description"], doc_id
             assert list(g["technologies"]) == x["technologies"], doc_id
+
+
+def test_kernel_memo_lives_in_the_worker_module():
+    """Spark ships Python functions with cloudpickle. The kernel's entity
+    function and the experience UDF must reach the module-level fuzzy
+    memo by reference after a round trip: a by-value copy would give
+    every task an empty _MEMO of its own."""
+    import pickle
+
+    from pyspark import cloudpickle
+
+    from document_parser_private_spark.operators import resume
+
+    shipped = pickle.loads(cloudpickle.dumps(resume.doc_entities))
+    assert shipped.__globals__["_MEMO"] is resume._MEMO
+
+    udf_body = pickle.loads(cloudpickle.dumps(resume._experience_udf.func))
+    entries = udf_body.__globals__["_experience_entries"]
+    assert entries.__globals__["_MEMO"] is resume._MEMO
