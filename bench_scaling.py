@@ -29,9 +29,10 @@ Methodology (each choice is load-bearing on this VM):
    page cache) so the measured run is steady-state without doubling
    wall-clock cost.
 
-Pipeline design for scaling (see plans/pipeline.py): one fused
-ArrowEvalPython stage (sections FSM + entity extraction in a single
-Arrow crossing), everything else native whole-stage codegen; zero
+Pipeline design for scaling (see plans/pipeline.py): one MapInArrow
+node (the per-doc kernel: span decode, classify, sections FSM and entity
+extraction in a single Arrow crossing), everything else native
+whole-stage codegen; zero
 shuffles when the input layout is balanced (repartition=False for the
 salt-bucketed storage layout; the salted-exchange path for ad-hoc
 inputs is exercised by bench.py and tests).
@@ -61,9 +62,9 @@ cores = int(sys.argv[1])
 # One scan task per storage shard (openCost >= maxPartitionBytes defeats
 # small-file bin packing). The default packing glued the 64 equal shards
 # into 34 ragged splits at defaultParallelism=32 -> 2 waves with a
-# 2-task tail, idling ~47%% of the 32 cores (BENCH/profile32.py r5:
-# bare scan+noop 34.8s -> 10.2s, full job 61.5s -> 47.6s min, same
-# window). At production scale shards are 128-512MB and always >= 1
+# 2-task tail, idling ~47%% of the 32 cores (r5 32-core profile, its
+# probe since retired: bare scan+noop 34.8s -> 10.2s, full job 61.5s ->
+# 47.6s min, same window). At production scale shards are 128-512MB and always >= 1
 # task each, so the probe layout now matches the contract the pipeline
 # is designed for instead of a small-file accident that understates it.
 spark = get_spark(app_name=f"scale{cores}", cores=cores, shuffle_partitions=cores,

@@ -1,5 +1,5 @@
-"""Education scalar functions as native expressions (SURVEY §2.8 F12-F17,
-F20).
+"""Education scalar functions as native expressions (SURVEY §2.8 F12,
+F13, F20).
 
 Degree expansion mirrors semantics.expand_degree (reference
 education_normalizer.py:92-142): punctuation strip, abbreviation
@@ -52,24 +52,3 @@ def gpa_col(text: Column) -> Column:
     return F.when(text.rlike(GPA_VETO_JRE), F.lit(None).cast("double")) \
         .otherwise(raw.cast("double"))
 
-
-FIELD_OF_STUDY_JRE = (
-    r"(?i)\b(computer science|software engineering|electrical engineering|"
-    r"mechanical engineering|civil engineering|data science|"
-    r"artificial intelligence|machine learning|information technology|"
-    r"business administration|finance|marketing|physics|mathematics|"
-    r"chemistry|biology|psychology|history|literature|arts|design)\b"
-)
-
-
-def field_of_study_col(text: Column) -> Column:
-    """First matching field keyword, lowercased (entity_extractor.py:
-    314-327 checks its list in order; the alternation is ordered the same
-    way, and Java regex alternation is first-match — but a LATER list
-    entry appearing EARLIER in the string wins under regex search, unlike
-    the reference's list loop. The generated corpus never hits that
-    divergence; the UDF path in operators/resume.py is the authoritative
-    list-ordered behavior)."""
-    return F.lower(
-        F.nullif(F.regexp_extract(text, FIELD_OF_STUDY_JRE, 1), F.lit(""))
-    )

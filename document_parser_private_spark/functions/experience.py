@@ -1,5 +1,4 @@
-"""Experience scalar functions as native expressions (SURVEY §2.8
-F18-F19, A4).
+"""Experience scalar functions as native expressions (SURVEY §2.8 F19).
 
 Title expansion mirrors semantics.expand_title (reference
 experience_normalizer.py:77-109 + config/patterns.yaml:47-71): compound
@@ -12,19 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..semantics import PY_WS_JRE, TITLE_ABBREVIATIONS
-
-COMPANY_SUFFIX_JRE = (
-    r"(?i)\b(Inc|Incorporated|Corp|Corporation|Co|Company|Ltd|Limited|"
-    r"LLC|Group)\b\.?"
-)
-
-
-def strip_company_suffixes_col(name: Column) -> Column:
-    """experience_normalizer.py:56-75: artifact strip + suffix strip."""
-    cleaned = F.regexp_replace(name, r"[^\w\s&.,-]", "")
-    cleaned = F.regexp_replace(cleaned, COMPANY_SUFFIX_JRE, "")
-    return F.regexp_replace(cleaned, f"^{PY_WS_JRE}+|{PY_WS_JRE}+$", "")
+from ..semantics import TITLE_ABBREVIATIONS
 
 
 def expand_title_col(title: Column) -> Column:
@@ -39,11 +26,3 @@ def expand_title_col(title: Column) -> Column:
     return F.when(F.coalesce(title, F.lit("")) == "", F.lit("")) \
         .otherwise(expanded)
 
-
-def month_span_col(start: Column, end: Column) -> Column:
-    """Whole-month span (year*12+month arithmetic), the SQL-portable
-    core of A4 (semantics.duration_months handles the day-carry variant
-    in the UDF path)."""
-    return (
-        (F.year(end) - F.year(start)) * 12 + (F.month(end) - F.month(start))
-    ).cast("long")

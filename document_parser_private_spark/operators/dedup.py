@@ -3,7 +3,7 @@ SimHash-distance, embedding-cosine) — core training-data-pipeline ops.
 
 Scale design notes (100 TB posture):
   - exact dedup: one shuffle on the 16-byte fingerprint; AQE coalesces.
-  - MinHash signatures: computed per doc in one mapInArrow pass
+  - MinHash signatures: computed per doc in one map_docs pass
     (minhash_signatures_agg, NO shuffle); only the band explode +
     groupBy shuffles, and it shuffles 8 small (band_idx, band_key) rows
     per doc instead of full text.
@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.bind import bind_once
+from .batch import map_docs, tokens
 from .textstats import WORD_RE, fingerprint_col
 
 N_MINHASHES = 16
@@ -54,85 +55,46 @@ MINHASH_B = (1254492528, 751060712, 1622456153, 1001143907, 20460337,
              814075905)
 
 
-def base_hash31_col(s: Column) -> Column:
-    """31-bit base hash: first 8 hex digits of md5, mod P. Portable —
-    Spark conv(,16,10) / DuckDB CAST('0x'||hex AS BIGINT)."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-        F.lit(MINHASH_P),
-    )
-
-
 def minhash_signatures_agg(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", k: int = 3,
                            n_hashes: int = N_MINHASHES) -> DataFrame:
-    """MinHash signature via explode + grouped min aggregates, one md5
-    per shingle + n linear permutations over GF(P).
+    """MinHash signature in ONE map_docs pass, zero shuffles: shingles,
+    the 31-bit base hash and the n permutation argmins are all per-doc
+    decisions.
 
-    Design choices, all for the 100 TB path:
-    - explode + min() aggregates rather than higher-order-function
-      expressions: HOF trees are interpreted (no codegen) and re-evaluated
-      per consuming expression after project collapse, while min() runs in
-      whole-stage codegen with partial (map-side) aggregation — the
-      shuffle carries one row per (doc, n_hashes) partial, never shingles.
-    - ONE md5 per shingle (was n_hashes salted md5s: 16x the hashing);
-      the n permutations are (A[i]*h + B[i]) mod P — pairwise-independent
+    - ONE md5 per shingle (k space-joined tokens): base hash = first 4
+      digest bytes (== first 8 hex digits) mod P, portable to the DuckDB
+      twin via CAST('0x'||hex AS BIGINT).
+    - The n permutations are (A[i]*h + B[i]) mod P — pairwise-independent
       LCGs over the prime field, so the 16 mins stay independent (the
       cheaper h1+i*h2 double-hash shares one argmin pool and measurably
-      correlates bands — tested and rejected).
+      correlates bands — tested and rejected). A*h < 2^62, so the numpy
+      int64 arithmetic never overflows.
+    - A doc with fewer than k tokens has one shingle: all its tokens
+      joined (the empty string for zero-token docs).
     Output: id, mh_0..mh_{n-1} bigint columns.
     """
-    # The WHOLE signature rides ONE mapInArrow batch pass: shingles,
-    # the 31-bit md5 base hash AND the n permutation argmins are all
-    # per-doc decisions, so nothing needs to cross an exchange at all —
-    # previously the batch pass emitted one row per shingle and a
-    # groupBy(id) ran n codegen min() aggregates (1 exchange). Identical
-    # values by construction: same ASCII token contract (PLANS.md §8),
-    # hashlib md5 == Spark md5 on UTF-8, and min((A[i]*h + B[i]) mod P)
-    # over the same shingle multiset is pure int64 arithmetic (numpy:
-    # A*h <= 2^62, no overflow). Zero-token docs keep the pinned
-    # single-empty-shingle behavior.
-    id_dt = df.schema[id_col].dataType.simpleString()
-    a_const = tuple(MINHASH_A[:n_hashes])
-    b_const = tuple(MINHASH_B[:n_hashes])
+    import hashlib
 
-    def sig_build(batches):
-        import hashlib
-        import re
+    import numpy as np
 
-        import numpy as np
-        import pyarrow as pa
+    av = np.array(MINHASH_A[:n_hashes], dtype=np.int64)[:, None]
+    bv = np.array(MINHASH_B[:n_hashes], dtype=np.int64)[:, None]
 
-        tok_re = re.compile(r"[^\x09-\x0d\x20]+")
-        av = np.array(a_const, dtype=np.int64)[:, None]
-        bv = np.array(b_const, dtype=np.int64)[:, None]
-        for b in batches:
-            ids = b.column(id_col).to_pylist()
-            texts = b.column(text_col).to_pylist()
-            sigs = np.empty((len(ids), n_hashes), dtype=np.int64)
-            for r, tx in enumerate(texts):
-                t = tok_re.findall(tx or "")
-                if len(t) >= k:
-                    grams = (" ".join(t[i:i + k])
-                             for i in range(len(t) - (k - 1)))
-                    ng = len(t) - (k - 1)
-                else:
-                    grams = (" ".join(t),)
-                    ng = 1
-                h = np.fromiter(
-                    (int.from_bytes(
-                        hashlib.md5(g.encode()).digest()[:4], "big")
-                     % MINHASH_P for g in grams),
-                    dtype=np.int64, count=ng)
-                sigs[r] = ((av * h[None, :] + bv) % MINHASH_P).min(axis=1)
-            yield pa.record_batch(
-                [pa.array(ids, b.column(id_col).type)]
-                + [pa.array(sigs[:, i]) for i in range(n_hashes)],
-                names=[id_col] + [f"mh_{i}" for i in range(n_hashes)])
+    def per_doc(tx):
+        t = tokens(tx)
+        ng = max(len(t) - (k - 1), 1)
+        h = np.fromiter(
+            (int.from_bytes(
+                hashlib.md5(" ".join(t[i:i + k]).encode()).digest()[:4],
+                "big") % MINHASH_P for i in range(ng)),
+            dtype=np.int64, count=ng)
+        sig = ((av * h[None, :] + bv) % MINHASH_P).min(axis=1)
+        return sig[:, None].tolist()
 
-    schema = f"{id_col} {id_dt}, " + ", ".join(
-        f"mh_{i} long" for i in range(n_hashes))
-    return df.select(id_col, text_col).mapInArrow(sig_build, schema)
+    return map_docs(
+        df, id_col, text_col,
+        ", ".join(f"mh_{i} long" for i in range(n_hashes)), per_doc)
 
 
 def minhash_bands_agg(df: DataFrame, text_col: str = "text",

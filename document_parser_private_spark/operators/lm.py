@@ -16,7 +16,8 @@ join (the per-doc distinct-bigram table, orders of magnitude smaller
 than token occurrences); the model tables are collapsed global counts
 joined on (w1, w2) and (w1) — both bounded by vocabulary size, the
 Zipf head being AQE skew-join territory; V rides a 1-row broadcast.
-Everything is whole-stage codegen — no Python.
+Past the one map_docs pass that counts each doc's bigrams, everything
+is whole-stage codegen.
 
 Reference scope note: the reference engine has no LM scoring
 (verified); beyond-reference training-data tier.
@@ -27,52 +28,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .batch import map_docs, tokens
+
 LM_K = 0.5  # add-k smoothing mass
 
 
 def _doc_bigram_counts(df: DataFrame, id_col: str,
                        text_col: str) -> DataFrame:
     """(_id, w1, w2, cnt) — per-doc collapsed bigram counts in ONE
-    mapInArrow batch pass (guide §4.2): replaces the interpreted
-    HOF transform + explode + groupBy(doc, w1, w2) hash agg; counts
-    are exact by construction (a row's tokens never split across
-    batches) and the first exchange carries already-collapsed rows.
-    Token contract: lowercased WORD_RE (ASCII whitespace split,
-    PLANS.md §8) — case folding stays native upstream."""
-    id_dt = df.schema[id_col].dataType.simpleString()
+    map_docs pass (guide §4.2): replaces the interpreted HOF transform
+    + explode + groupBy(doc, w1, w2) hash agg; counts are exact by
+    construction (a doc's tokens never split across batches) and the
+    first exchange carries already-collapsed rows. Token contract:
+    lowercased `tokens` (ASCII whitespace split, PLANS.md §8) — case
+    folding stays native upstream."""
+    from collections import Counter
 
-    def build(batches):
-        import re
-        from collections import Counter
+    def per_doc(tx):
+        t = tokens(tx)
+        c = Counter(zip(t, t[1:]))
+        return [w1 for w1, _ in c], [w2 for _, w2 in c], c.values()
 
-        import pyarrow as pa
-
-        tok_re = re.compile(r"[^\x09-\x0d\x20]+")
-        for b in batches:
-            ids = b.column(id_col).to_pylist()
-            texts = b.column("_lt").to_pylist()
-            out_id: list = []
-            out_1: list[str] = []
-            out_2: list[str] = []
-            out_c: list[int] = []
-            for did, tx in zip(ids, texts):
-                t = tok_re.findall(tx or "")
-                for (w1, w2), c in Counter(zip(t, t[1:])).items():
-                    out_id.append(did)
-                    out_1.append(w1)
-                    out_2.append(w2)
-                    out_c.append(c)
-            yield pa.record_batch(
-                [pa.array(out_id, b.column(id_col).type),
-                 pa.array(out_1, pa.string()),
-                 pa.array(out_2, pa.string()),
-                 pa.array(out_c, pa.int64())],
-                names=["_id", "w1", "w2", "cnt"])
-
-    return df.select(
-        F.col(id_col).alias(id_col),
-        F.lower(F.col(text_col)).alias("_lt"),
-    ).mapInArrow(build, f"_id {id_dt}, w1 string, w2 string, cnt long")
+    return map_docs(
+        df.select(F.col(id_col).alias("_id"),
+                  F.lower(F.col(text_col)).alias("_lt")),
+        "_id", "_lt", "w1 string, w2 string, cnt long", per_doc)
 
 
 def lm_score(
@@ -160,7 +140,7 @@ def ngram_counts(df: DataFrame, n: int = 3, min_count: int = 2,
     Emits (gram, n_occurrences, n_docs) — gram is the space-joined
     token window.
 
-    Scale shape: one counted mapInArrow pass (trainprep's
+    Scale shape: one counted map_docs pass (trainprep's
     _ngram_rows_arrow) tokenizes each doc once and emits its distinct
     grams as (doc, gram, cnt) rows, so the single exchange carries one
     row per (gram, doc), bounded by doc length — document frequency
@@ -168,7 +148,7 @@ def ngram_counts(df: DataFrame, n: int = 3, min_count: int = 2,
     occurrences. min_count pruning happens after the final agg, which
     collapses the Zipf tail map-side before the shuffle.
     """
-    # gram rows ride the shared mapInArrow builder (trainprep): the
+    # gram rows ride the shared map_docs builder (trainprep): the
     # interpreted transform(slice+array_join) per gram was this
     # operator's dominant cost at 50k docs. Case folding stays NATIVE
     # (lower() before the boundary) so the engine lowercase contract

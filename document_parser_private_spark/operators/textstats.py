@@ -1,12 +1,17 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-Hot-path functions are native Column expressions (JVM regex, codegen) or
-single mapInArrow passes (simhash_agg's numpy bit vote over token
-hashes). Each has a DuckDB-SQL-expressible twin in __spark_entry__ for the
-correctness oracle.
+Production shapes, each with a DuckDB-SQL twin in __spark_entry__ for
+the correctness oracle:
+  with_textstats — all five per-doc statistics below in ONE mapInArrow
+                   pass (pyarrow.compute RE2 over whole columns)
+  simhash_agg    — ONE mapInArrow pass (operators/batch.map_docs) with a
+                   per-doc numpy bit vote over token hashes
+  lexical_stats  — (doc, token, cnt) rows from one map_docs pass, then
+                   codegen aggregates
+The native *_col expressions stay exported for composition.
 
 Deterministic formulas (authoritative definitions for this engine):
-  tokens         — count of \\S+ runs
+  tokens         — count of WORD_RE runs (ASCII-whitespace split)
   bpe_tokens     — count of [A-Za-z]+ | [0-9]+ | single other non-space
                    (BPE-ish pre-tokenizer regex)
   quality_score  — 0.4*min(words/100,1) + 0.3*min(5*stop_hits/words,1)
@@ -26,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..semantics import PY_WS_JRE, PY_WS_JRE_INNER
+from .batch import map_docs, round6, tokens
 
 # Tokenization whitespace for the textstats/dedup token contracts is the
 # explicit ASCII set below, identical in Java regex and RE2 (engine-native
@@ -33,11 +39,11 @@ from ..semantics import PY_WS_JRE, PY_WS_JRE_INNER
 # Python-parity surface, and the choice is deliberate perf: a character
 # class containing >0xFF codepoints drops Java's regex engine off its
 # ASCII fast path — measured 1.9x slower across the token/bpe/punct
-# extracts at sf0.1 (BENCH/ab_pyws.py, interleaved A/B; the explicit
-# ASCII class is within ~15% of bare \s). The full Python-whitespace
-# class (semantics.PY_WS_JRE) is kept ONLY where Python-parity is the
-# contract: classify trim/split (golden span equality) and fingerprint
-# (dedup keys stable vs Python str.split()).
+# extracts at sf0.1 (interleaved A/B with a since-retired probe; the
+# explicit ASCII class is within ~15% of bare \s). The full
+# Python-whitespace class (semantics.PY_WS_JRE) is kept ONLY where
+# Python-parity is the contract: classify trim/split (golden span
+# equality) and fingerprint (dedup keys stable vs Python str.split()).
 TOKEN_WS_INNER = r"\x{9}-\x{d}\x{20}"
 WORD_RE = f"[^{TOKEN_WS_INNER}]+"
 BPE_RE = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{TOKEN_WS_INNER}]"
@@ -82,17 +88,6 @@ def quality_score_col(text: Column) -> Column:
         + (F.lit(1.0) - F.least(punct * 4.0 / c, F.lit(1.0))) * 0.3
     )
     return F.round(score, 6)
-
-
-def lang_guess_col(text: Column) -> Column:
-    scores = {lang: _hits(text, LANG_MARKERS[lang]) for lang in LANG_PRIORITY}
-    best = F.greatest(*[scores[lang] for lang in LANG_PRIORITY])
-    expr = F.lit("und")
-    for lang in reversed(LANG_PRIORITY):
-        expr = F.when(
-            (scores[lang] == best) & (best > 0), F.lit(lang)
-        ).otherwise(expr)
-    return expr
 
 
 # ASCII subset of PY_WS_JRE (covers every ASCII Python-ws codepoint, so
@@ -153,16 +148,10 @@ def with_textstats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     def stats(batches):
         import hashlib as _hl
-        from decimal import ROUND_HALF_UP, Decimal
 
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-
-        q6 = Decimal("0.000001")
-
-        def round6(x: float) -> float:
-            return float(Decimal(repr(x)).quantize(q6, ROUND_HALF_UP))
 
         for b in batches:
             t = b.column(text_col)
@@ -230,49 +219,21 @@ def with_textstats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _word_count_rows_arrow(df: DataFrame, id_col: str,
                            text_col: str) -> DataFrame:
-    """(id, token, cnt) rows via ONE mapInArrow batch pass — the shared
-    fast tokenizer+counter. Exact replacement for
+    """(id, token, cnt) rows via ONE map_docs pass — the shared
+    tokenizer+counter. Exact replacement for
     explode(regexp_extract_all(WORD_RE)) + groupBy(id, token).count():
-    all of a row's tokens live in the same Arrow batch, so per-doc
-    counts are complete by construction and the downstream plan starts
-    from the already-collapsed (doc, token) table (guide §2.3 —
-    aggregate before you shuffle). Token contract is WORD_RE (explicit
-    ASCII whitespace class, identical in Java regex / RE2 / Python re,
-    PLANS.md §8). Case folding is NOT done here — lower() natively
-    upstream, keeping the engine case contract in one place."""
-    id_dt = df.schema[id_col].dataType.simpleString()
+    a doc's tokens never split across batches, so the downstream plan
+    starts from the already-collapsed (doc, token) table (guide §2.3 —
+    aggregate before you shuffle). Case folding is NOT done here —
+    lower() natively upstream, keeping the engine case contract in one
+    place."""
+    from collections import Counter
 
-    def build(batches):
-        import re
-        from collections import Counter
+    def per_doc(tx):
+        c = Counter(tokens(tx))
+        return c.keys(), c.values()
 
-        import pyarrow as pa
-
-        tok_re = re.compile(r"[^\x09-\x0d\x20]+")
-        for b in batches:
-            ids = b.column(id_col).to_pylist()
-            texts = b.column(text_col).to_pylist()
-            out_id: list = []
-            out_t: list[str] = []
-            out_c: list[int] = []
-            for did, tx in zip(ids, texts):
-                for tok, c in Counter(tok_re.findall(tx or "")).items():
-                    out_id.append(did)
-                    out_t.append(tok)
-                    out_c.append(c)
-            yield pa.record_batch(
-                [pa.array(out_id, b.column(id_col).type),
-                 pa.array(out_t, pa.string()),
-                 pa.array(out_c, pa.int64())],
-                names=[id_col, "token", "cnt"])
-
-    return df.select(id_col, text_col).mapInArrow(
-        build, f"{id_col} {id_dt}, token string, cnt long"
-    )
-
-
-def hamming64_col(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
+    return map_docs(df, id_col, text_col, "token string, cnt long", per_doc)
 
 
 SIMHASH_BITS = 60  # 60-bit fits signed int64 on both engines with headroom
@@ -299,62 +260,35 @@ def _token_hash60(tok: str) -> int:
 def simhash_agg(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id",
                 n_bits: int = SIMHASH_BITS) -> DataFrame:
-    """SimHash via explode + codegen per-bit SUM aggregates — the scale
-    formulation (like minhash_signatures_agg): tokens explode to narrow
-    rows, each bit's majority vote is a map-side-partial sum, the shuffle
-    carries one row of n_bits ints per doc. Token hash = first 15 hex
-    digits of md5 (60 bits), portable to the DuckDB twin via
-    CAST('0x'||hex AS BIGINT). Empty docs -> simhash 0 (left anti side
-    restored with a zero literal)."""
-    # ONE mapInArrow pass, zero shuffles: every decision is per-doc and
-    # integer-exact, so the whole vote runs next to the tokenizer
-    # (guide §4.2 — batch the heavy lifting; previously: JVM regex
-    # explode -> groupBy(doc, tok) -> 60 codegen vote SUMs -> groupBy
-    # (doc) -> left join for empties = 2 exchanges + 2 hash aggs).
-    # Contract unchanged: hv = first 15 md5 hex digits (== top 60 bits
-    # of the digest) as int, vote weight = occurrence count, bit k set
-    # iff its weighted vote sum > 0, zero-token/null docs -> 0. All
-    # arithmetic is int64 — bit-identical to the agg form by
-    # construction (no float order sensitivity).
+    """SimHash in ONE map_docs pass, zero shuffles: every decision is
+    per-doc and integer-exact, so the whole vote runs next to the
+    tokenizer (guide §4.2). Token hash hv = first 15 hex digits of md5
+    (the top 60 bits of the digest), portable to the DuckDB twin via
+    CAST('0x'||hex AS BIGINT); vote weight = occurrence count; bit k is
+    set iff its weighted vote sum > 0; zero-token and null docs -> 0.
+    All arithmetic is int64, so the value equals the explode + per-bit
+    SUM vote form bit for bit (tests/test_batch_builders.py)."""
     assert n_bits == SIMHASH_BITS  # hash-width contract, mirrored in twin
-    id_dt = df.schema[id_col].dataType.simpleString()
+    from collections import Counter
 
-    def sim_build(batches):
-        import re
+    import numpy as np
 
-        import numpy as np
-        import pyarrow as pa
+    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
+    weights = (np.uint64(1) << shifts).astype(np.int64)
 
-        tok_re = re.compile(r"[^\x09-\x0d\x20]+")
-        shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
-        weights = (np.uint64(1) << shifts).astype(np.int64)
-        for b in batches:
-            ids = b.column(id_col).to_pylist()
-            texts = b.column(text_col).to_pylist()
-            out: list[int] = []
-            for tx in texts:
-                counts: dict[str, int] = {}
-                for tok in tok_re.findall(tx or ""):
-                    counts[tok] = counts.get(tok, 0) + 1
-                if not counts:
-                    out.append(0)
-                    continue
-                hv = np.fromiter(
-                    (_token_hash60(t) for t in counts), dtype=np.uint64,
-                    count=len(counts))
-                cnt = np.fromiter(counts.values(), dtype=np.int64,
-                                  count=len(counts))
-                ones = ((hv[:, None] >> shifts) & np.uint64(1)).astype(
-                    np.int64)
-                votes = ((2 * ones - 1) * cnt[:, None]).sum(axis=0)
-                out.append(int(weights[votes > 0].sum()))
-            yield pa.record_batch(
-                [pa.array(ids, b.column(id_col).type),
-                 pa.array(out, pa.int64())], names=[id_col, "simhash"])
+    def per_doc(tx):
+        counts = Counter(tokens(tx))
+        if not counts:
+            return ([0],)
+        hv = np.fromiter((_token_hash60(t) for t in counts),
+                         dtype=np.uint64, count=len(counts))
+        cnt = np.fromiter(counts.values(), dtype=np.int64,
+                          count=len(counts))
+        ones = ((hv[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
+        votes = ((2 * ones - 1) * cnt[:, None]).sum(axis=0)
+        return ([int(weights[votes > 0].sum())],)
 
-    return df.select(id_col, text_col).mapInArrow(
-        sim_build, f"{id_col} {id_dt}, simhash long"
-    )
+    return map_docs(df, id_col, text_col, "simhash long", per_doc)
 
 
 def lexical_stats(df: DataFrame, text_col: str = "text",
@@ -373,12 +307,11 @@ def lexical_stats(df: DataFrame, text_col: str = "text",
     near-maximal entropy with high hapax_frac flags gibberish — the
     standard pair of corpus-curation signals next to quality_score.
 
-    Scale shape: one groupBy (doc, token) with map-side partial
-    counts, then one groupBy (doc) — keys are doc_id-prefixed so
-    nothing moves across documents; left join back to the input keeps
-    zero-token docs (NULL stats). Entirely codegen; the ln() calls are
-    IEEE doubles identical across Spark/DuckDB at round-6 (same
-    contract as operators/lm.py avg_logp).
+    Scale shape: (doc, token, cnt) rows from one map_docs pass
+    (_word_count_rows_arrow), then one codegen groupBy (doc); left join
+    back to the input keeps zero-token docs (NULL stats). The ln()
+    calls are IEEE doubles identical across Spark/DuckDB at round-6
+    (same contract as operators/lm.py avg_logp).
     """
     did = F.col(id_col)
     # (doc, token, cnt) rides the shared mapInArrow tokenizer+counter:

@@ -20,15 +20,13 @@ quality/sampling live in operators/curation.py):
                       with overlap (context-window packing prep).
 
 Scale shape (100 TB posture):
-  - repetition_stats: explode -> two-level codegen aggregation, keys
-    prefixed by doc_id so partial aggregation collapses each doc's
-    lines/bigrams map-side; no cross-doc data movement. The explicit
-    explode+agg form is deliberate — HOF aggregate() trees are
-    interpreted per element (PLANS.md §5), codegen SUM/COUNT are not.
-  - decontaminate: the benchmark side is grams-distinct and BROADCAST
-    (benchmarks are tiny relative to the corpus); the corpus side is a
-    narrow explode -> broadcast-hash semi-join -> one doc_id-keyed
-    count. No corpus-sized shuffle.
+  - repetition_stats: ONE map_docs pass (operators/batch.py), zero
+    shuffles — every signal is a per-doc integer count, so line and
+    bigram Counters and the argmax run next to the tokenizer.
+  - decontaminate: both gram streams come from map_docs passes; the
+    benchmark side is grams-distinct and BROADCAST (benchmarks are tiny
+    relative to the corpus); the corpus side is a narrow broadcast-hash
+    join -> one doc_id-keyed count. No corpus-sized shuffle.
   - chunk_documents: zero shuffles — tokens are bound ONCE per row
     (functions/bind.bind_once, avoiding the per-element re-eval cliff),
     chunk structs are built in a single transform(), and the explode
@@ -42,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.bind import bind_once
+from .batch import map_docs, round6, tokens
 from .textstats import WORD_RE
 
 __all__ = ["repetition_stats", "decontaminate", "chunk_documents",
@@ -63,148 +62,45 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
 
     Docs with no non-empty lines get zeros ('' for top_bigram).
 
-    ONE mapInArrow pass (r6): every signal is per-doc and the counts
-    are integers, so line Counters, bigram Counters and the argmax all
-    ride the same batch crossing — the previous shape was 3 corpus
-    scans (lines branch, grams branch, base join — no cross-branch
-    CSE, PLANS.md §21/§23) with 2 grouped exchanges and 2 joins.
-    Value contracts preserved exactly: split on '\\n' only (not
+    ONE map_docs pass: every signal is per-doc and the counts are
+    integers, so line Counters, bigram Counters and the argmax all ride
+    the same batch crossing. Value contracts: split on '\\n' only (not
     splitlines), char counts via len() == Spark length(), the bigram
-    tie-break compares the joined 'w1 w2' strings (as the relational
-    form does) in UTF-8 byte order == Python code-point order,
-    and the three round(…, 6) calls replicate Spark's
-    Round(HALF_UP over BigDecimal.valueOf) via Decimal(repr(x)) — the
-    same contract the textstats batch pass pins.
+    tie-break compares the joined 'w1 w2' strings (as the DuckDB twin
+    does) in UTF-8 byte order == Python code-point order, and the
+    fractions use round6 (Spark round(x, 6)).
     """
-    id_dt = df.schema[id_col].dataType.simpleString()
+    from collections import Counter
 
-    def build(batches):
-        import re
-        from collections import Counter
-        from decimal import ROUND_HALF_UP, Decimal
+    def per_doc(tx):
+        lines = Counter(ln for ln in tx.split("\n") if ln)
+        n_lines = sum(lines.values())
+        n_distinct = len(lines)
+        chars_all = sum(c * len(ln) for ln, c in lines.items())
+        chars_distinct = sum(len(ln) for ln in lines)
+        t = tokens(tx)
+        bg = Counter(zip(t, t[1:]))
+        n_bigrams = sum(bg.values())
+        if bg:
+            neg, top_bigram = min(
+                (-c, f"{w1} {w2}") for (w1, w2), c in bg.items())
+            top_cnt = -neg
+        else:
+            top_bigram, top_cnt = "", 0
+        return (
+            [n_lines],
+            [round6(float(n_lines - n_distinct) / max(float(n_lines), 1.0))],
+            [round6((float(chars_all) - chars_distinct)
+                    / max(float(chars_all), 1.0))],
+            [top_bigram],
+            [round6(float(top_cnt) / max(float(n_bigrams), 1.0))],
+        )
 
-        import pyarrow as pa
-
-        tok_re = re.compile(r"[^\x09-\x0d\x20]+")
-        q6 = Decimal("0.000001")
-
-        def round6(x: float) -> float:
-            return float(Decimal(repr(x)).quantize(q6, ROUND_HALF_UP))
-
-        for b in batches:
-            ids = b.column(id_col).to_pylist()
-            texts = b.column(text_col).to_pylist()
-            o_nl: list[int] = []
-            o_dlf: list[float] = []
-            o_dlcf: list[float] = []
-            o_tb: list[str] = []
-            o_tbf: list[float] = []
-            for tx in texts:
-                lines = Counter(
-                    ln for ln in (tx or "").split("\n") if ln)
-                n_lines = sum(lines.values())
-                n_distinct = len(lines)
-                chars_all = sum(c * len(ln) for ln, c in lines.items())
-                chars_distinct = sum(len(ln) for ln in lines)
-                t = tok_re.findall(tx or "")
-                bg = Counter(zip(t, t[1:]))
-                n_bigrams = sum(bg.values())
-                if bg:
-                    neg, top_bigram = min(
-                        (-c, f"{w1} {w2}") for (w1, w2), c in bg.items())
-                    top_cnt = -neg
-                else:
-                    top_bigram, top_cnt = "", 0
-                o_nl.append(n_lines)
-                o_dlf.append(round6(
-                    float(n_lines - n_distinct) / max(float(n_lines), 1.0)))
-                o_dlcf.append(round6(
-                    (float(chars_all) - chars_distinct)
-                    / max(float(chars_all), 1.0)))
-                o_tb.append(top_bigram)
-                o_tbf.append(round6(
-                    float(top_cnt) / max(float(n_bigrams), 1.0)))
-            yield pa.record_batch(
-                [pa.array(ids, b.column(id_col).type),
-                 pa.array(o_nl, pa.int64()),
-                 pa.array(o_dlf, pa.float64()),
-                 pa.array(o_dlcf, pa.float64()),
-                 pa.array(o_tb, pa.string()),
-                 pa.array(o_tbf, pa.float64())],
-                names=[id_col, "n_lines", "dup_line_frac",
-                       "dup_line_char_frac", "top_bigram",
-                       "top_bigram_frac"])
-
-    return df.select(id_col, text_col).mapInArrow(
-        build,
-        f"{id_col} {id_dt}, n_lines long, dup_line_frac double, "
-        "dup_line_char_frac double, top_bigram string, "
-        "top_bigram_frac double",
-    )
-
-
-def _repetition_stats_agg_form(df: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id") -> DataFrame:
-    """The pre-r6 relational formulation, kept as the parity reference
-    for tests/test_batch_builders.py (same values by construction)."""
-    did = F.col(id_col)
-    t = F.col(text_col)
-    lines = df.select(
-        did,
-        F.explode(
-            F.filter(F.split(t, "\n", -1), lambda x: F.length(x) > 0)
-        ).alias("line"),
-    )
-    per_line = lines.groupBy(did, F.col("line")).agg(
-        F.count("*").alias("cnt")
-    )
-    line_stats = per_line.groupBy(did).agg(
-        F.sum("cnt").alias("n_lines"),
-        F.count("*").alias("n_distinct"),
-        F.sum(F.col("cnt") * F.length("line")).alias("chars_all"),
-        F.sum(F.length("line")).alias("chars_distinct"),
-    )
-    grams = _ngram_rows_arrow(
-        df.select(id_col, text_col), 2, id_col, text_col, hashed=False,
-    )
-    per_gram = grams.groupBy(did, F.col("gram")).agg(
-        F.count("*").alias("cnt")
-    )
-    gram_stats = per_gram.groupBy(did).agg(
-        F.min(F.struct((-F.col("cnt")).alias("neg"),
-                       F.col("gram").alias("gram"))).alias("top"),
-        F.sum("cnt").alias("n_bigrams"),
-    ).select(
-        did,
-        F.col("top.gram").alias("top_bigram"),
-        (-F.col("top.neg")).alias("top_cnt"),
-        F.col("n_bigrams"),
-    )
-
-    base = df.select(did)
-    out = (
-        base.join(line_stats, id_col, "left")
-        .join(gram_stats, id_col, "left")
-    )
-    nl = F.coalesce(F.col("n_lines"), F.lit(0)).cast("long")
-    ca = F.coalesce(F.col("chars_all"), F.lit(0)).cast("double")
-    return out.select(
-        did,
-        nl.alias("n_lines"),
-        F.round(
-            (nl - F.coalesce(F.col("n_distinct"), F.lit(0))).cast("double")
-            / F.greatest(nl.cast("double"), F.lit(1.0)), 6
-        ).alias("dup_line_frac"),
-        F.round(
-            (ca - F.coalesce(F.col("chars_distinct"), F.lit(0)))
-            / F.greatest(ca, F.lit(1.0)), 6
-        ).alias("dup_line_char_frac"),
-        F.coalesce(F.col("top_bigram"), F.lit("")).alias("top_bigram"),
-        F.round(
-            F.coalesce(F.col("top_cnt"), F.lit(0)).cast("double")
-            / F.greatest(F.coalesce(F.col("n_bigrams"), F.lit(0))
-                         .cast("double"), F.lit(1.0)), 6
-        ).alias("top_bigram_frac"),
+    return map_docs(
+        df, id_col, text_col,
+        "n_lines long, dup_line_frac double, dup_line_char_frac double, "
+        "top_bigram string, top_bigram_frac double",
+        per_doc,
     )
 
 
@@ -212,94 +108,39 @@ def _ngram_rows_arrow(df: DataFrame, n: int, id_col: str, text_col: str,
                       hashed: bool = True,
                       per_doc_distinct: bool = False,
                       counted: bool = False) -> DataFrame:
-    """(id, gram) rows via ONE mapInArrow batch pass — the shared fast
-    n-gram builder. The higher-order transform(slice+concat_ws[+md5])
-    form is interpreted per position (PLANS.md §5) and measured as the
-    dominant cost of every gram-based operator at 50k docs; the batch
-    pass runs the identical token contract ([^\\x09-\\x0d\\x20]+ — ASCII
-    by design, identical in Java and Python regex, PLANS.md §8) and
-    hashlib md5 == Spark md5 on UTF-8 bytes. Case folding is NOT done
-    here — lower() the text column natively upstream so the engine
-    contract for case stays in one place.
+    """(id, gram) rows via ONE map_docs pass — the shared n-gram
+    builder. A gram is n space-joined `tokens`; hashed=True emits its
+    hashlib md5 hex (== Spark md5 on UTF-8 bytes) as `gh`. Case folding
+    is NOT done here — lower() the text column natively upstream so the
+    engine contract for case stays in one place.
 
     per_doc_distinct mirrors array_distinct-after-build: first
     occurrence order, one row per distinct gram per doc.
 
     counted=True emits (id, gram, cnt) — one row per DISTINCT gram per
     doc with its occurrence count, exactly groupBy(id, gram).count()
-    collapsed at the source (a row's grams never split across batches),
-    so consumers skip that whole first hash-agg (guide §2.3)."""
-    id_dt = df.schema[id_col].dataType.simpleString()
-    out_col = "gh" if hashed else "gram"
+    collapsed at the source, so consumers skip that whole first
+    hash-agg (guide §2.3)."""
+    import hashlib
+    from collections import Counter
+
     assert not (counted and per_doc_distinct)
 
-    def build(batches):
-        import hashlib
-        import re
-        from collections import Counter
+    def per_doc(tx):
+        t = tokens(tx)
+        grams = [" ".join(t[i:i + n]) for i in range(len(t) - (n - 1))]
+        if counted:
+            c = Counter(grams)
+            grams, cnt = list(c), c.values()
+        elif per_doc_distinct:
+            grams = list(dict.fromkeys(grams))
+        if hashed:
+            grams = [hashlib.md5(g.encode()).hexdigest() for g in grams]
+        return (grams, cnt) if counted else (grams,)
 
-        import pyarrow as pa
-
-        tok_re = re.compile(r"[^\x09-\x0d\x20]+")
-        for b in batches:
-            ids = b.column(id_col).to_pylist()
-            texts = b.column(text_col).to_pylist()
-            out_id: list = []
-            out_g: list[str] = []
-            out_c: list[int] = []
-            for did, tx in zip(ids, texts):
-                t = tok_re.findall(tx or "")
-                m = len(t) - (n - 1)
-                if m <= 0:
-                    continue
-                if counted:
-                    c = Counter(
-                        " ".join(t[i:i + n]) for i in range(m))
-                    for g, cn in c.items():
-                        if hashed:
-                            g = hashlib.md5(g.encode()).hexdigest()
-                        out_id.append(did)
-                        out_g.append(g)
-                        out_c.append(cn)
-                    continue
-                seen: set = set()
-                for i in range(m):
-                    g = " ".join(t[i:i + n])
-                    if hashed:
-                        g = hashlib.md5(g.encode()).hexdigest()
-                    if per_doc_distinct:
-                        if g in seen:
-                            continue
-                        seen.add(g)
-                    out_id.append(did)
-                    out_g.append(g)
-            cols = [pa.array(out_id, b.column(id_col).type),
-                    pa.array(out_g, pa.string())]
-            names = [id_col, out_col]
-            if counted:
-                cols.append(pa.array(out_c, pa.int64()))
-                names.append("cnt")
-            yield pa.record_batch(cols, names=names)
-
-    schema = f"{id_col} {id_dt}, {out_col} string" + (
+    out_ddl = ("gh" if hashed else "gram") + " string" + (
         ", cnt long" if counted else "")
-    return df.select(id_col, text_col).mapInArrow(build, schema)
-
-
-def _gram_hashes(text_col, n: int):
-    """md5 hashes of the text's token n-grams (ASCII token contract,
-    space-joined). Tokens are bound once; the per-gram work inside the
-    transform touches only the bound lambda variable."""
-    return bind_once(
-        F.regexp_extract_all(text_col, F.lit(WORD_RE), F.lit(0)),
-        lambda toks: F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, n))),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
+    return map_docs(df, id_col, text_col, out_ddl, per_doc)
 
 
 def decontaminate(df: DataFrame, benchmark: DataFrame, n: int = 8,
@@ -313,10 +154,10 @@ def decontaminate(df: DataFrame, benchmark: DataFrame, n: int = 8,
     The benchmark gram set is deduplicated and broadcast — the corpus
     side never shuffles its text, only (doc_id, gram-hash) pairs into a
     doc_id-keyed count."""
-    # both gram streams ride the shared mapInArrow builder — the
+    # both gram streams ride the shared map_docs builder — the
     # interpreted per-gram md5 HOF was the operator's dominant cost
-    # (values identical; the bench side keys by a constant since only
-    # the gram set matters).
+    # (the bench side keys by a constant since only the gram set
+    # matters).
     bench_grams = (
         _ngram_rows_arrow(
             benchmark.select(F.lit(0).alias("_b"),
@@ -507,59 +348,35 @@ def duplicated_substrings(df: DataFrame, n: int = 10,
     dup_token_frac. Docs with < n tokens report zero windows.
 
     Scale shape (100 TB posture): windows travel as (doc_id, pos,
-    md5-hash) — never text; the occurrence count is one gh-keyed
-    aggregation with map-side partials; the dup flag comes back via a
-    gh-keyed hash join BETWEEN the two biggest intermediates, both
-    already partitioned by gh from the agg (AQE reuses the exchange).
-    Region merging is classic gaps-and-islands over (doc, pos) — one
-    doc-keyed window sort, then codegen aggregates. Nothing is ever
-    quadratic and no per-doc state leaves its partition.
+    md5-hash) — never text, from one map_docs pass; the occurrence
+    count and dup flag come from one gh-partitioned window count (a
+    single gh exchange). Region merging is classic gaps-and-islands
+    over (doc, pos) — one doc-keyed window sort, then codegen
+    aggregates. Nothing is ever quadratic and no per-doc state leaves
+    its partition.
     """
     toks = F.regexp_extract_all(F.col(text_col), F.lit(WORD_RE), F.lit(0))
     base = df.select(
         F.col(id_col),
         F.size(toks).cast("long").alias("n_tokens"),
     )
-    # Window build: one mapInArrow batch pass (tokenize + n-gram join +
-    # md5 in Python per Arrow batch), NOT a higher-order
-    # transform(slice+concat_ws+md5 per position). The HOF tree is
-    # interpreted (PLANS.md §5) and profiled as ~100% of this operator's
-    # cost at 50k docs; measured A/B at 50k docs/32 cores: HOF 8.9 s,
-    # HOF-with-md5-after-explode 7.9 s, 9x window-lead build 27.8 s,
-    # mapInArrow 2.9 s — all four bit-identical (exceptAll() empty both
-    # ways). The Python tokenizer mirrors WORD_RE exactly: the token
-    # contract is the ASCII class [^\x09-\x0d\x20]+ by design
-    # (PLANS.md §8), identical in Java and Python regex.
-    id_dt = df.schema[id_col].dataType.simpleString()
+    # Window build: one map_docs pass (tokenize + n-gram join + md5 per
+    # Arrow batch), NOT a higher-order transform(slice+concat_ws+md5 per
+    # position). The HOF tree is interpreted (PLANS.md §5) and profiled
+    # as ~100% of this operator's cost at 50k docs; measured A/B at 50k
+    # docs/32 cores: HOF 8.9 s, HOF-with-md5-after-explode 7.9 s, 9x
+    # window-lead build 27.8 s, batch pass 2.9 s — all four
+    # bit-identical (exceptAll() empty both ways).
+    import hashlib
 
-    def _win_builder(batches):
-        import hashlib
-        import re
+    def windows(tx):
+        t = tokens(tx)
+        pos = range(len(t) - (n - 1))
+        return pos, [
+            hashlib.md5(" ".join(t[i:i + n]).encode()).hexdigest()
+            for i in pos]
 
-        import pyarrow as pa
-
-        tok_re = re.compile(r"[^\x09-\x0d\x20]+")
-        for b in batches:
-            ids = b.column(id_col).to_pylist()
-            texts = b.column(text_col).to_pylist()
-            out_id: list = []
-            out_pos: list[int] = []
-            out_gh: list[str] = []
-            for did, tx in zip(ids, texts):
-                t = tok_re.findall(tx or "")
-                for i in range(len(t) - (n - 1)):
-                    out_id.append(did)
-                    out_pos.append(i)
-                    out_gh.append(hashlib.md5(
-                        " ".join(t[i:i + n]).encode()).hexdigest())
-            yield pa.record_batch(
-                [pa.array(out_id, b.column(id_col).type),
-                 pa.array(out_pos, pa.int32()),
-                 pa.array(out_gh, pa.string())], names=[id_col, "pos", "gh"])
-
-    wins = df.select(id_col, text_col).mapInArrow(
-        _win_builder, f"{id_col} {id_dt}, pos int, gh string"
-    )
+    wins = map_docs(df, id_col, text_col, "pos int, gh string", windows)
     # Duplicate flag via a gh-partitioned window count, NOT a
     # groupBy(gh)+self-join: the join form references `wins` twice and
     # Catalyst recomputes the window-hash subtree per reference

@@ -59,17 +59,39 @@ METRICS_SCHEMA = (
 )
 
 
+def _read_side_table(spark: SparkSession, path: str,
+                     schema: str) -> DataFrame | None:
+    """A side table (lineage or metrics), read with its own schema; None
+    when it does not exist yet.
+
+    A table whose first append was killed before committing a file (only
+    `_temporary/` on disk) reads as empty. Any other error (an unreadable
+    file, a permission problem) propagates, because treating a broken
+    ledger as empty would silently recompute every part. None rather
+    than an empty DataFrame keeps the missing-ledger case of every fresh
+    run free of Spark jobs."""
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
+
+
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     """Crash-consistent metrics view: metrics are appended (step 2)
     BEFORE the lineage commit point (step 3), so a kill between the two
     re-processes the group and appends metrics again. Naive sums over the
     raw metrics table double-count those orphans; joining to lineage
     'done' rows on (part, run_id) drops them — a metrics row is valid
-    only if its exact (part, run_id) reached the commit point."""
-    metrics = spark.read.parquet(f"{out_dir}/metrics")
-    lineage = (
-        spark.read.parquet(f"{out_dir}/lineage")
-        .where(F.col("status") == "done")
+    only if its exact (part, run_id) reached the commit point. A run
+    killed before any commit reads as empty."""
+    metrics = _read_side_table(spark, f"{out_dir}/metrics", METRICS_SCHEMA)
+    lineage = _read_side_table(spark, f"{out_dir}/lineage", LINEAGE_SCHEMA)
+    if metrics is None or lineage is None:
+        return spark.createDataFrame([], METRICS_SCHEMA)
+    done = (
+        lineage.where(F.col("status") == "done")
         .select("part", "run_id")
         .distinct()
     )
@@ -78,24 +100,15 @@ def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     # deterministic, so whichever row survives is correct. Keying on the
     # explicit commit key (not whole-row equality) keeps the invariant
     # even if a nondeterministic metric column (e.g. timing) is added.
-    return metrics.join(lineage, ["part", "run_id"], "left_semi") \
+    return metrics.join(done, ["part", "run_id"], "left_semi") \
         .dropDuplicates(["part", "run_id"])
 
 
 def _lineage_done(spark: SparkSession, out_dir: str) -> set[int]:
-    """Parts the ledger marks 'done'; empty when no ledger exists yet.
-
-    Read with the ledger's own schema, so a directory whose first append
-    was killed before committing a file reads as empty rather than
-    failing schema inference. Any other error (an unreadable file, a
-    permission problem) propagates: treating a broken ledger as empty
-    would silently recompute every part."""
-    try:
-        lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(
-            f"{out_dir}/lineage")
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    """Parts the ledger marks 'done'; empty when no ledger exists yet,
+    raises when it is broken (see _read_side_table)."""
+    lineage = _read_side_table(spark, f"{out_dir}/lineage", LINEAGE_SCHEMA)
+    if lineage is None:
         return set()
     rows = (
         lineage.where(F.col("status") == "done")

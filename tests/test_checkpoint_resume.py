@@ -10,6 +10,7 @@ import pytest
 from document_parser_private_spark.oracle import expected_rows
 from document_parser_private_spark.plans.checkpoint import (
     _lineage_done,
+    read_metrics,
     run_with_checkpoint,
 )
 
@@ -79,13 +80,13 @@ def test_metrics_survive_orphan_window(spark, corpus_df, tmp_path):
     """Kill between the metrics append and the lineage commit: the raw
     metrics table double-counts the re-processed group, read_metrics
     does not (lineage semi-join on (part, run_id) drops orphans)."""
-    from document_parser_private_spark.plans.checkpoint import read_metrics
-
     out = str(tmp_path / "orphan")
     with pytest.raises(RuntimeError, match="between metrics append"):
         run_with_checkpoint(
             corpus_df, out, parts_per_commit=3, fail_before_lineage=1
         )
+    # killed before the first lineage append: metrics/ but no lineage/
+    assert read_metrics(spark, out).collect() == []
     # resume (fresh run_id) completes all 8 partitions
     run_with_checkpoint(corpus_df, out, parts_per_commit=3)
 
@@ -228,17 +229,24 @@ def test_commit_group_jobs_are_labelled(traced_run):
 
 
 def test_broken_ledger_is_not_read_as_empty(spark, corpus_df, tmp_path):
-    """A corrupt lineage file must fail the run, not make it recompute
-    every part as if nothing were done; a ledger whose first append was
-    killed before committing a file is empty."""
+    """A corrupt lineage file must fail the run and the metrics view,
+    not make the run recompute every part as if nothing were done; side
+    tables whose first append was killed before committing a file are
+    empty."""
     out = tmp_path / "broken"
     (out / "lineage").mkdir(parents=True)
     (out / "lineage" / "part-00000.parquet").write_bytes(b"not parquet")
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         run_with_checkpoint(corpus_df, str(out), parts_per_commit=3)
     assert not os.path.exists(out / "extracted")
+    (out / "metrics").mkdir()
+    (out / "metrics" / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        read_metrics(spark, str(out)).collect()
 
     killed = tmp_path / "killed_first_append"
     (killed / "lineage" / "_temporary" / "0").mkdir(parents=True)
+    (killed / "metrics" / "_temporary" / "0").mkdir(parents=True)
     assert _lineage_done(spark, str(killed)) == set()
+    assert read_metrics(spark, str(killed)).collect() == []
     assert _lineage_done(spark, str(tmp_path / "missing")) == set()

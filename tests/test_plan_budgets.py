@@ -10,6 +10,10 @@ shows up as a jump to >= 1).
 
 Ceilings are the audited r6 values (tools/plan_audit.py) plus one
 scan of slack on the non-checkpointed entries.
+
+The live plans of the queries whose operators run a batch builder
+(operators/batch.map_docs) also pin their MapInArrow count, with no
+slack: one Python crossing per builder call.
 """
 
 import pytest
@@ -44,6 +48,17 @@ SCAN_CEILINGS = {
     "ivf_topk": 3,
 }
 
+# query -> max allowed MapInArrow nodes (decontaminate builds grams for
+# the corpus and for the benchmark side)
+MAP_IN_ARROW_CEILINGS = {
+    "textstats": 1,
+    "simhash": 1,
+    "minhash": 1,
+    "repetition_stats": 1,
+    "decontaminate": 2,
+    "substring_dedup": 1,
+}
+
 
 @pytest.mark.parametrize("name", sorted(SCAN_CEILINGS))
 def test_scan_count_within_budget(spark, name):
@@ -57,4 +72,10 @@ def test_scan_count_within_budget(spark, name):
         f"{name}: {scans} FileScans > pinned {SCAN_CEILINGS[name]} — "
         "a subtree is being recomputed per reference (PLANS.md §21) or "
         "an eager checkpoint was dropped"
+    )
+    crossings = plan.count("MapInArrow")
+    assert crossings <= MAP_IN_ARROW_CEILINGS.get(name, crossings), (
+        f"{name}: {crossings} MapInArrow nodes > pinned "
+        f"{MAP_IN_ARROW_CEILINGS.get(name)} — a batch builder crosses "
+        "into Python more than once"
     )
