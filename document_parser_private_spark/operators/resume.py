@@ -5,10 +5,11 @@
     batch pass below and streaming.stream_extract: Arrow span decode,
     then classify + layout + section FSM via the oracle's semantics
   extract_all_fused_op — the batch pipeline's ONE mapInArrow crossing:
-    the kernel plus doc_entities (skills / education / experience /
-    projects over the section texts: fuzzy ontology normalization +
-    sequential entry parsing); carried columns such as `part` pass
-    through untouched
+    the kernel plus doc_entities over the section texts (fuzzy ontology
+    normalization + sequential entry parsing) for only the entities the
+    caller's columns name, so a checkpointed run (which commits skills
+    but no education / experience / projects) never runs or ships the
+    other three; carried columns such as `part` pass through untouched
   contact / summary / certifications — pure Catalyst expressions over
     the returned sections struct
   _education_udf / _experience_udf — the entry parsers as standalone
@@ -72,6 +73,14 @@ PROJECTS_TYPE = T.ArrayType(T.StructType([
     T.StructField("description", T.StringType()),
     T.StructField("technologies", T.ArrayType(T.StringType())),
 ]))
+# The kernel's entity columns, in output order. Each entity is extracted
+# from the section of the same name.
+ENTITY_TYPES = {
+    "skills": T.ArrayType(T.StringType()),
+    "education": EDUCATION_TYPE,
+    "experience": EXPERIENCE_TYPE,
+    "projects": PROJECTS_TYPE,
+}
 
 
 @pandas_udf(EDUCATION_TYPE)
@@ -103,8 +112,12 @@ def _memoed(memo: dict, key: str, fn):
     return hit
 
 
-def doc_entities(secs: dict, edu_memo: dict, proj_memo: dict) -> tuple:
-    """One doc's sections -> (skills, education, experience, projects).
+def doc_entities(secs: dict, wanted: tuple[str, ...], edu_memo: dict,
+                 proj_memo: dict) -> tuple:
+    """One doc's sections -> the values of the `wanted` entities (names
+    from ENTITY_TYPES), in that order. Only their extractors run: each is
+    a pure function of its own section text, so a subset's values equal
+    the full call's.
 
     Module-level on purpose: cloudpickle ships a nested function BY
     VALUE, with private copies of the globals it names, so a kernel that
@@ -119,14 +132,15 @@ def doc_entities(secs: dict, edu_memo: dict, proj_memo: dict) -> tuple:
     and the extractors are pure functions of the text, so a
     content-keyed dict skips the whole parse on a repeat; on corpora
     with no repeats the cost is one dict miss per doc."""
-    return (
-        S.extract_skills(secs.get("skills") or "", _LOWER, _V2C, _INDEX,
-                         memo=_MEMO),
-        _memoed(edu_memo, secs.get("education") or "",
-                S.extract_education_entries),
-        _experience_entries(secs.get("experience") or ""),
-        _memoed(proj_memo, secs.get("projects") or "", _project_entries),
-    )
+    extract = {
+        "skills": lambda t: S.extract_skills(t, _LOWER, _V2C, _INDEX,
+                                             memo=_MEMO),
+        "education": lambda t: _memoed(edu_memo, t,
+                                       S.extract_education_entries),
+        "experience": _experience_entries,
+        "projects": lambda t: _memoed(proj_memo, t, _project_entries),
+    }
+    return tuple(extract[name](secs.get(name) or "") for name in wanted)
 
 
 @pandas_udf(EXPERIENCE_TYPE)
@@ -134,7 +148,8 @@ def _experience_udf(text: pd.Series) -> pd.Series:
     return text.apply(lambda t: _experience_entries(t or ""))
 
 
-# The kernel's output columns, in order (batch adds the id and entities).
+# The kernel's output columns, in order (batch adds the id and the
+# requested entities).
 CLEAN_FIELDS = [
     T.StructField("clean_spans", SPAN_TYPE),
     T.StructField("blocks_kept", T.IntegerType()),
@@ -181,14 +196,20 @@ def clean_and_sections(spans) -> tuple:
     return clean, kept, dropped, sections_of_span_list(clean)
 
 
-def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
-                         id_col: str = "doc_id",
+def extract_all_fused_op(df: DataFrame, columns: tuple[str, ...],
+                         spans_col: str = "spans", id_col: str = "doc_id",
                          carry: tuple[str, ...] = ()) -> DataFrame:
     """Whole-pipeline fused Python pass: the shared per-doc kernel
     (decode_spans + clean_and_sections) plus entity extraction
     (doc_entities) in ONE mapInArrow crossing, RAW spans in, final
     extraction columns out (then native contact/summary/certifications
     projections).
+
+    Only the entities named in `columns` are extracted, declared in the
+    output schema and built: Spark cannot prune the outputs of an opaque
+    Python node, so a select after it would still pay for every entity
+    and ship it back to the JVM. The CLEAN_FIELDS columns are always
+    built (sections feeds contact/summary/certifications).
 
     Why one Python pass and no native classify in front: measured at
     200k docs / 32 cores, a native classify HOF tree (interpreted
@@ -208,15 +229,13 @@ def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
     join back to the input is needed); select any other upstream column
     you need before calling.
     """
+    entities = tuple(e for e in ENTITY_TYPES if e in columns)
     id_field = df.schema[id_col]
     out_type = T.StructType([
         T.StructField(id_col, id_field.dataType, id_field.nullable),
         *(df.schema[c] for c in carry),
         *CLEAN_FIELDS,
-        T.StructField("skills", T.ArrayType(T.StringType())),
-        T.StructField("education", EDUCATION_TYPE),
-        T.StructField("experience", EXPERIENCE_TYPE),
-        T.StructField("projects", PROJECTS_TYPE),
+        *(T.StructField(e, ENTITY_TYPES[e]) for e in entities),
     ])
     from pyspark.sql.pandas.types import to_arrow_schema
     pa_schema = to_arrow_schema(out_type)
@@ -232,16 +251,13 @@ def extract_all_fused_op(df: DataFrame, spans_col: str = "spans",
             cols[id_col] = b.column(id_col).to_pylist()
             for arr in decode_spans(b.column(spans_col)):
                 clean, kept, dropped, secs = clean_and_sections(arr)
-                skills, edu, exp, proj = doc_entities(secs, edu_memo,
-                                                      proj_memo)
                 cols["clean_spans"].append(clean)
                 cols["blocks_kept"].append(kept)
                 cols["blocks_dropped"].append(dropped)
                 cols["sections"].append(secs)
-                cols["skills"].append(skills)
-                cols["education"].append(edu)
-                cols["experience"].append(exp)
-                cols["projects"].append(proj)
+                for name, value in zip(entities, doc_entities(
+                        secs, entities, edu_memo, proj_memo)):
+                    cols[name].append(value)
             yield pa.record_batch(
                 [b.column(f.name) if f.name in carry
                  else pa.array(cols[f.name], type=f.type)

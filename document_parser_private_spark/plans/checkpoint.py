@@ -15,11 +15,15 @@ partition; parquet is used because the sandbox ships no Iceberg runtime):
 
 Plan per commit group: the fused extraction kernel runs ONCE (`part`
 crosses it as an untouched Arrow column, so nothing joins back to the
-input) and its result is written once. The group's metrics are then
-aggregated from the committed `extracted/part=<p>` directories alone — a
-few int columns, no Python — so they count exactly the rows that were
-committed. The metrics and lineage rows (at most parts_per_commit each)
-are written as native literal plans.
+input) and its result is written once. The kernel is asked for the
+committed columns only (COMMITTED_COLUMNS): it runs decode, classify and
+layout, the section FSM and skills, and never parses the education,
+experience or projects entities, which a commit does not write. The
+group's metrics are then aggregated from the committed
+`extracted/part=<p>` directories alone — a few int columns, no Python —
+so they count exactly the rows that were committed. The metrics and
+lineage rows (at most parts_per_commit each) are written as native
+literal plans.
 
 Correctness argument (kill anywhere, rerun, identical final output):
   1. a partition's data is written with dynamic partition overwrite —
@@ -42,7 +46,6 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
@@ -57,6 +60,11 @@ METRICS_SCHEMA = (
     "part int, doc_count long, blocks_kept long, blocks_dropped long, "
     "parse_failures long, run_id string"
 )
+# The pipeline columns a commit writes (the nested ones as JSON).
+COMMITTED_COLUMNS = (
+    "doc_id", "blocks_kept", "blocks_dropped", "clean_spans", "sections",
+    "contact", "summary", "skills",
+)
 
 
 def _read_side_table(spark: SparkSession, path: str,
@@ -64,18 +72,21 @@ def _read_side_table(spark: SparkSession, path: str,
     """A side table (lineage or metrics), read with its own schema; None
     when it does not exist yet.
 
-    A table whose first append was killed before committing a file (only
-    `_temporary/` on disk) reads as empty. Any other error (an unreadable
-    file, a permission problem) propagates, because treating a broken
-    ledger as empty would silently recompute every part. None rather
-    than an empty DataFrame keeps the missing-ledger case of every fresh
-    run free of Spark jobs."""
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    Existence is checked through the path's Hadoop FileSystem, so a
+    missing table costs no Spark read (reading a missing path makes
+    Spark log a FileNotFoundException stack trace at WARN on every fresh
+    run). A table whose first append was killed before committing a file
+    (only `_temporary/` on disk) reads as empty. Any error reading an
+    existing table (an unreadable file, a permission problem) propagates,
+    because treating a broken ledger as empty would silently recompute
+    every part. None rather than an empty DataFrame keeps the
+    missing-ledger case of every fresh run free of Spark jobs."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(
+        spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(jpath):
         return None
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -187,7 +198,8 @@ def run_with_checkpoint(
             group = pending[i:i + parts_per_commit]
             sc.setJobDescription(f"checkpoint run={run_id} parts={group}")
             started = time.time()
-            result = extract_pipeline(df.where(F.col("part").isin(group)))
+            result = extract_pipeline(df.where(F.col("part").isin(group)),
+                                      columns=COMMITTED_COLUMNS)
             # 1. idempotent data commit (dynamic partition overwrite)
             result.select(
                 "doc_id", "part", "blocks_kept", "blocks_dropped",

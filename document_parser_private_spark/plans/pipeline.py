@@ -5,8 +5,10 @@
       -> ONE mapInArrow pass per doc:                  (Python, narrow)
            classify content/boilerplate/media-anchor,
            layout inference + offset renumbering,
-           section FSM, skills/education/experience/projects;
-           `part`, when present, crosses as an untouched Arrow column
+           section FSM, then only the entities among
+           skills/education/experience/projects that the caller's
+           `columns` name; `part`, when present, crosses as an
+           untouched Arrow column
       -> contact / summary / certifications           (native, narrow)
 
 After the single up-front repartition the whole pipeline is narrow — no
@@ -78,11 +80,18 @@ def extract_pipeline(
     df: DataFrame,
     num_partitions: int | None = None,
     repartition: bool = True,
+    columns: tuple[str, ...] = FINAL_COLUMNS,
 ) -> DataFrame:
-    """Full pipeline; returns one row per doc with clean spans, sections,
-    extraction metrics columns and resume entities (FINAL_COLUMNS), plus
-    the input's `part` when it has one (plans.checkpoint partitions its
-    output by it without joining back to the input).
+    """Full pipeline; returns one row per doc with the requested
+    `columns` (any of FINAL_COLUMNS: clean spans, sections, extraction
+    metrics columns and resume entities), plus the input's `part` when it
+    has one (plans.checkpoint partitions its output by it without joining
+    back to the input).
+
+    `columns` is pushed into the Python kernel: an entity that is not
+    requested is neither extracted nor shipped back to the JVM, which a
+    select on the result could not achieve. Unknown names raise
+    ValueError.
 
     repartition=False skips the salted exchange for inputs whose STORAGE
     is already salt-bucketed (the 100 TB deployment writes the documents
@@ -90,10 +99,15 @@ def extract_pipeline(
     partitioning — so steady-state runs are exchange-free and the whole
     pipeline is one narrow stage). Keep the default for ad-hoc inputs.
     """
+    unknown = [c for c in columns if c not in FINAL_COLUMNS]
+    if unknown:
+        raise ValueError(
+            f"unknown pipeline columns {unknown}; expected any of "
+            f"{FINAL_COLUMNS}")
     out = repartition_salted(df, num_partitions) if repartition else df
     carry = ("part",) if "part" in df.columns else ()
-    return extract_all_fused_op(out, carry=carry).select(*FINAL_COLUMNS,
-                                                         *carry)
+    return extract_all_fused_op(out, columns, carry=carry).select(
+        *columns, *carry)
 
 
 # Export schema = the reference Resume model (schemas/resume_schema.py:

@@ -3,6 +3,7 @@ assert only pending partitions are processed and final output is
 identical to an uninterrupted run."""
 
 import os
+import re
 from collections import defaultdict
 
 import pytest
@@ -127,9 +128,10 @@ def _last_execution_id(spark) -> int:
     return last
 
 
-def _plan_node_names(spark, after_id: int) -> dict[int, list[str]]:
-    """Plan-graph node names of every SQL execution with id > after_id,
-    read from the SQL status store once the listener bus has drained."""
+def _plan_nodes(spark, after_id: int) -> dict[int, list[tuple[str, str]]]:
+    """Plan-graph (name, description) of the nodes of every SQL execution
+    with id > after_id, read from the SQL status store once the listener
+    bus has drained."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     store = spark._jsparkSession.sharedState().statusStore()
     out = {}
@@ -138,10 +140,11 @@ def _plan_node_names(spark, after_id: int) -> dict[int, list[str]]:
         e = it.next()
         if e.executionId() > after_id:
             nodes = store.planGraph(e.executionId()).allNodes().iterator()
-            names = []
+            found = []
             while nodes.hasNext():
-                names.append(nodes.next().name().strip())
-            out[e.executionId()] = names
+                node = nodes.next()
+                found.append((node.name().strip(), node.desc()))
+            out[e.executionId()] = found
     return out
 
 
@@ -173,10 +176,19 @@ def traced_run(spark, corpus_df, tmp_path_factory):
         description_after = sc.getLocalProperty("spark.job.description")
     finally:
         sc.setJobDescription(None)
+    nodes = _plan_nodes(spark, after_exec)
     return {
         "out": out,
         "run_id": res["run_id"],
-        "plans": _plan_node_names(spark, after_exec),
+        "plans": {i: [name for name, _ in ns] for i, ns in nodes.items()},
+        # output columns of each MapInArrow node, from its description
+        # "MapInArrow fused(<inputs>)#n, [<outputs>], <isBarrier>"
+        "kernel_outputs": [
+            [re.sub(r"#\d+$", "", c.strip())
+             for c in re.search(r"\[([^\]]*)\]", desc).group(1).split(",")]
+            for ns in nodes.values() for name, desc in ns
+            if name.startswith("MapInArrow")
+        ],
         "jobs": _job_descriptions(spark, after_job),
         "description_after": description_after,
     }
@@ -212,6 +224,16 @@ def test_one_kernel_pass_per_commit_group_and_no_join(traced_run):
     assert len(kernel_runs) == 3, plans
     joins = [n for names in plans.values() for n in names if "Join" in n]
     assert joins == [], plans
+
+
+def test_commit_group_kernels_build_only_committed_columns(traced_run):
+    """The commit-group kernels extract skills, which a commit writes,
+    and none of the entities it does not write."""
+    outputs = traced_run["kernel_outputs"]
+    assert len(outputs) == 3
+    for cols in outputs:
+        assert cols == ["doc_id", "part", "clean_spans", "blocks_kept",
+                        "blocks_dropped", "sections", "skills"], cols
 
 
 def test_commit_group_jobs_are_labelled(traced_run):

@@ -148,3 +148,107 @@ def test_kernel_memo_lives_in_the_worker_module():
     udf_body = pickle.loads(cloudpickle.dumps(resume._experience_udf.func))
     entries = udf_body.__globals__["_experience_entries"]
     assert entries.__globals__["_MEMO"] is resume._MEMO
+
+
+def test_doc_entities_runs_only_the_wanted_extractors(corpus_rows,
+                                                      monkeypatch):
+    """Spark-free: for every subset of the entities, doc_entities returns
+    exactly the full call's values for that subset, and runs no
+    extractor outside it."""
+    from itertools import combinations
+
+    from document_parser_private_spark import semantics as S
+    from document_parser_private_spark.operators import resume
+
+    names = tuple(resume.ENTITY_TYPES)
+    assert names == ("skills", "education", "experience", "projects")
+    sections = [resume.clean_and_sections(r["spans"])[3]
+                for r in corpus_rows]
+    full = [resume.doc_entities(s, names, {}, {}) for s in sections]
+
+    extractors = {
+        "skills": "extract_skills",
+        "education": "extract_education_entries",
+        "experience": "extract_experience_entries",
+        "projects": "extract_project_entries",
+    }
+    called: set[str] = set()
+    depth = [0]  # experience/projects call extract_skills themselves
+
+    def counting(entity, fn):
+        def wrapper(*args, **kwargs):
+            if depth[0] == 0:
+                called.add(entity)
+            depth[0] += 1
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                depth[0] -= 1
+        return wrapper
+
+    for entity, fn_name in extractors.items():
+        monkeypatch.setattr(S, fn_name, counting(entity, getattr(S, fn_name)))
+
+    for k in range(len(names) + 1):
+        for wanted in combinations(names, k):
+            called.clear()
+            edu_memo: dict = {}
+            proj_memo: dict = {}
+            got = [resume.doc_entities(s, wanted, edu_memo, proj_memo)
+                   for s in sections]
+            want = [tuple(f[names.index(n)] for n in wanted) for f in full]
+            assert got == want, wanted
+            assert called == set(wanted), wanted
+
+
+def _map_in_arrow_outputs(df) -> list[list[str]]:
+    """Output column names of every MapInArrow node in df's optimized
+    plan."""
+    found = []
+
+    def walk(node):
+        seq = node.output()
+        if node.nodeName() == "MapInArrow":
+            found.append([seq.apply(i).name() for i in range(seq.size())])
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+SUBSET = ("summary", "doc_id", "projects", "blocks_dropped", "clean_spans")
+
+
+def test_pipeline_column_subset_matches_full_pipeline(corpus_df,
+                                                      result_by_id):
+    """A column subset yields the full pipeline's values on those
+    columns (plus `part`), in the requested order."""
+    sub = extract_pipeline(corpus_df, num_partitions=4, columns=SUBSET)
+    assert sub.columns == [*SUBSET, "part"]
+    rows = sub.collect()
+    assert len(rows) == len(result_by_id)
+    for r in rows:
+        full = result_by_id[r["doc_id"]]
+        for c in (*SUBSET, "part"):
+            assert r[c] == full[c], (r["doc_id"], c)
+
+
+def test_pipeline_kernel_builds_only_requested_entities(corpus_df):
+    """The projection reaches the Python node: its output declares the
+    requested entity and none of the other three."""
+    sub = extract_pipeline(corpus_df, num_partitions=4, columns=SUBSET)
+    (kernel_out,) = _map_in_arrow_outputs(sub)
+    assert "projects" in kernel_out
+    for entity in ("skills", "education", "experience"):
+        assert entity not in kernel_out, kernel_out
+    (full_out,) = _map_in_arrow_outputs(
+        extract_pipeline(corpus_df, num_partitions=4))
+    for entity in ("skills", "education", "experience", "projects"):
+        assert entity in full_out, full_out
+
+
+def test_pipeline_rejects_unknown_columns(corpus_df):
+    with pytest.raises(ValueError, match="experiences"):
+        extract_pipeline(corpus_df, columns=("doc_id", "experiences"))
