@@ -36,54 +36,48 @@ from document_parser_private_spark.semantics import (
 _WORD_SQL = "[^" + _TWSI + "]+"
 
 
+# the tables `_read` spreads (PLANS.md §22)
+_SPREAD_TABLES = frozenset({"documents", "embeddings"})
+# below this a read is cheaper as one task than as an exchange plus
+# near-empty tasks (region/nation, the sf0.001 and sf0.01 documents)
+_SPREAD_FLOOR = 256 << 10
+
+
+def _needs_spread(splits: int, cores: int, size_bytes: int) -> bool:
+    """True when a scan of `splits` input splits would leave cores idle
+    and holds enough bytes to pay for the exchange."""
+    return splits < cores and size_bytes >= _SPREAD_FLOOR
+
+
 def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Guide §2.5 input-skew fix: the sf tables are single parquet
-    files with ONE row group, so the scan is a single task and every
-    narrow operator behind it (tokenizers, mapInArrow passes, filters)
-    serializes on one core no matter the cluster size. When the scan's
-    parallelism is below the session's cores, repartition immediately
-    after the read — the payload moves once, before any per-row work.
-    The condition is runtime-derived (scan splits vs cores), so on
-    production inputs with many files/row groups it is a no-op rather
-    than a local[32] constant."""
+    """Round-robin `df` over the session's cores right after its read
+    when `_needs_spread` says so. The sf tables are single parquet files
+    with one row group, so their scan is one task and every narrow
+    operator behind it runs on one core; the repartition moves the
+    payload once, before any per-row work. Multi-split inputs (many
+    files or row groups) are left as they are."""
     n = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    splits = df.rdd.getNumPartitions()
+    if splits >= n:
         return df
-    # tiny dimension tables (region/nation/sf0.01 docs) are cheaper as
-    # one task than as an exchange + n near-empty tasks
     size = int(df._jdf.queryExecution().optimizedPlan().stats()
                .sizeInBytes())
-    if size < (256 << 10):
-        return df
-    return df.repartition(n)
+    return df.repartition(n) if _needs_spread(splits, n, size) else df
 
 
-def _docs(spark: SparkSession, sf_dir: str,
-          spread: bool = True) -> DataFrame:
-    """documents reader. spread=True (default) applies the §2.5 fix —
-    right for every query with heavy per-row work (tokenizer passes,
-    regex, hashing). Pass spread=False for queries whose per-row work
-    is lighter than an exchange + 32-task scheduling (measured at BOTH
-    sf0.1 and the 10x dir: mixture/weighted/quantile ~2x worse with
-    the spread; pagerank/triangle derive tiny edge lists from doc_id
-    only; eval_metrics/token_histogram/strip_boilerplate/
-    skill_normalize_join/hll_distinct flat at 10x and ~2x worse at
-    sf0.1)."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return _spread(df, spark) if spread else df
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The one table reader: `{sf_dir}/{name}.parquet`, passed through
+    `_spread` when `name` is documents or embeddings, never otherwise.
 
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-                   spark)
-
-
-def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # no _spread: the TPC-H/events tables feed scan+aggregate queries
-    # where a full exchange costs more than single-digit-task scans
-    # save (measured 2-3x regressions on event_sessions, lineitem_agg,
-    # region_revenue, cohort_retention with a blanket spread)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    Documents and embeddings rows (about 300 characters of text, a
+    64-float vector) feed tokenizers, hashing, Python passes and vector
+    math, which a one-split scan runs on one core. TPC-H and events rows
+    are a few scalars feeding partial aggregates, which an exchange only
+    slows down (at the 10x dir, spreading them doubles region_revenue,
+    event_sessions and cohort_retention). Measured at 4 cores: PLANS.md
+    §22."""
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _spread(df, spark) if name in _SPREAD_TABLES else df
 
 
 # ---------------------------------------------------------------------------
@@ -96,7 +90,7 @@ def entry(spark: SparkSession) -> DataFrame:
         text_docs_to_span_table,
     )
 
-    docs = _docs(spark, "/root/testdata/sf0.001")
+    docs = _read(spark, "/root/testdata/sf0.001", "documents")
     spans = text_docs_to_span_table(docs)
     # only the columns selected below: the kernel then parses no
     # education / experience / projects entities
@@ -143,7 +137,7 @@ def _q_contact_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(did, 3) == 0,
         F.concat(F.lit(" github.com/user"), F.pmod(did, 53).cast("string")),
     ).otherwise(F.lit(""))
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             _sample_col(_CONTACT_NAME_SAMPLES),
@@ -167,7 +161,7 @@ def _q_contact_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_summary_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O3 sentence-aware 500-char truncation (native)."""
     from document_parser_private_spark.functions.text import summary_col
-    d = _docs(spark, sf_dir)
+    d = _read(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         summary_col(F.concat(F.col("text"), F.lit(". tail end"))).alias("summary"),
@@ -176,7 +170,7 @@ def _q_summary_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.textstats import with_textstats
-    return with_textstats(_docs(spark, sf_dir)).select(
+    return with_textstats(_read(spark, sf_dir, "documents")).select(
         "doc_id", "tokens", "bpe_tokens", "quality_score", "lang_guess",
         "fingerprint",
     )
@@ -184,7 +178,7 @@ def _q_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 histogram: count by (lang, token)."""
-    d = _docs(spark, sf_dir, spread=False)
+    d = _read(spark, sf_dir, "documents")
     toks = d.select(
         "lang",
         F.explode(
@@ -209,7 +203,7 @@ def _q_dominant_token(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_distinct_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 distinct + sort, emitted as a joined string."""
-    d = _docs(spark, sf_dir)
+    d = _read(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         F.array_join(F.array_sort(F.collect_set("source")), ",").alias("sources"),
         F.count("*").cast("long").alias("n_docs"),
@@ -219,7 +213,7 @@ def _q_distinct_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup over a corpus with synthetic duplicates (doc ∪ doc+10^6)."""
     from document_parser_private_spark.operators.dedup import exact_dedup
-    d = _docs(spark, sf_dir, spread=False).select("doc_id", "text")
+    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
     dup = d.union(
         d.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
     )
@@ -231,7 +225,7 @@ def _q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.dedup import (
         minhash_signatures_agg,
     )
-    sig = minhash_signatures_agg(_docs(spark, sf_dir))
+    sig = minhash_signatures_agg(_read(spark, sf_dir, "documents"))
     return sig.select(
         "doc_id",
         F.col("mh_0").alias("minhash_0"),
@@ -245,59 +239,48 @@ def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bucket_col passed EXPLICITLY: the library default is the LSH-bounded
     path; this query pins the bucketed formulation + its oracle)."""
     from document_parser_private_spark.operators.dedup import jaccard_pairs
-    return jaccard_pairs(_docs(spark, sf_dir, spread=False), bucket_col="source",
+    return jaccard_pairs(_read(spark, sf_dir, "documents"), bucket_col="source",
                          threshold=0.5)
 
 
 def _q_near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.dedup import embedding_near_dups
-    return embedding_near_dups(_emb(spark, sf_dir), threshold=0.35)
+    return embedding_near_dups(_read(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.similarity import cosine_topk
-    return cosine_topk(_emb(spark, sf_dir), n_queries=5, k=10)
+    return cosine_topk(_read(spark, sf_dir, "embeddings"), n_queries=5, k=10)
 
 
 def _q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.similarity import lsh_buckets
-    return lsh_buckets(_emb(spark, sf_dir))
+    return lsh_buckets(_read(spark, sf_dir, "embeddings"))
 
 
 def _q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5/J4: per-source micro P/R/F1 of doc token sets vs the source's
     min-doc token set as ground truth."""
     from document_parser_private_spark.operators.metrics import evaluation_metrics
-    d = _docs(spark, sf_dir, spread=False)
+    d = _read(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", "source",
         F.array_distinct(
             F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
         ).alias("entities"),
     )
-    w = Window.partitionBy("source").orderBy("doc_id")
-    # NOTE (r6): the 4-scan fan-out here was A/B-tested against the
-    # persist+checkpoint pattern and the persist LOSES (1.5 vs 2.2-3.2 s
-    # at 50k docs): materializing the joined wide entity arrays costs
-    # more than re-deriving the cheap narrow subtree — the §21 pattern
-    # pays off only when the recomputed subtree is expensive relative
-    # to its materialized size.
-    truth = (
-        toks.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("source", F.col("entities").alias("truth_entities"))
-    )
-    pred_with_truth = toks.join(truth, "source")
-    pred = pred_with_truth.select("doc_id", "source", "entities")
-    tru = pred_with_truth.select(
-        "doc_id", F.col("truth_entities").alias("entities")
-    )
-    return evaluation_metrics(pred, tru, group_col="source")
+    # truth per row from a window over the one scan: a truth aggregate
+    # joined back would read documents twice (the r6 form read it 4x),
+    # and each read pays its own spread
+    truth = F.min_by("entities", "doc_id").over(Window.partitionBy("source"))
+    return evaluation_metrics(toks.withColumn("truth_entities", truth),
+                              "entities", "truth_entities",
+                              group_col="source")
 
 
 def _q_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style aggregate (A-family; partial agg + AQE)."""
-    li = _tbl(spark, sf_dir, "lineitem")
+    li = _read(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -315,7 +298,7 @@ def _q_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_order_month_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 duration-in-months analogue over orders."""
-    o = _tbl(spark, sf_dir, "orders")
+    o = _read(spark, sf_dir, "orders")
     span = (
         (F.year(F.max("o_orderdate")) - F.year(F.min("o_orderdate"))) * 12
         + (F.month(F.max("o_orderdate")) - F.month(F.min("o_orderdate")))
@@ -328,7 +311,7 @@ def _q_order_month_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window top-k per group."""
-    c = _tbl(spark, sf_dir, "customer")
+    c = _read(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.desc("c_acctbal"), F.asc("c_custkey")
     )
@@ -345,10 +328,10 @@ def _q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-join star query: broadcast dims, one fact shuffle."""
-    o = _tbl(spark, sf_dir, "orders")
-    c = _tbl(spark, sf_dir, "customer")
-    n = _tbl(spark, sf_dir, "nation")
-    r = _tbl(spark, sf_dir, "region")
+    o = _read(spark, sf_dir, "orders")
+    c = _read(spark, sf_dir, "customer")
+    n = _read(spark, sf_dir, "nation")
+    r = _read(spark, sf_dir, "region")
     return (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -362,7 +345,7 @@ def _q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _tbl(spark, sf_dir, "events")
+    e = _read(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
         F.round(F.avg("value"), 6).alias("avg_value"),
@@ -372,7 +355,7 @@ def _q_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via lag: gaps > 30 min start a new session."""
-    e = _tbl(spark, sf_dir, "events")
+    e = _read(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # ts is TIMESTAMP_NTZ; go via TIMESTAMP (session tz pinned to UTC) so
     # the epoch matches DuckDB's epoch() on the naive value
@@ -391,7 +374,7 @@ def _q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pii_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F22: salted sha256 8-hex hash of synthesized emails."""
     from document_parser_private_spark.functions.pii import pii_hash_col
-    d = _docs(spark, sf_dir)
+    d = _read(spark, sf_dir, "documents")
     email = F.concat(
         F.lit("user"), F.col("doc_id").cast("string"), F.lit("@example.com")
     )
@@ -420,7 +403,7 @@ def _sample_col(samples: list[str]):
 def _q_degree_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12/F13 degree abbreviation expansion + grammar chain (native)."""
     from document_parser_private_spark.functions.education import expand_degree_col
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id", _sample_col(_DEGREE_SAMPLES).alias("raw_degree")
     )
     return d.select(
@@ -431,7 +414,7 @@ def _q_degree_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_title_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F19 two-pass title abbreviation expansion (native)."""
     from document_parser_private_spark.functions.experience import expand_title_col
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id", _sample_col(_TITLE_SAMPLES).alias("raw_title")
     )
     return d.select(
@@ -442,7 +425,7 @@ def _q_title_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F24 deterministic date-parse subset (native)."""
     from document_parser_private_spark.functions.dates import parse_date_col
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id", _sample_col(_DATE_SAMPLES).alias("raw_date")
     )
     return d.select(
@@ -453,7 +436,7 @@ def _q_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_gpa_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F20 GPA extract with scale-indicator veto (native)."""
     from document_parser_private_spark.functions.education import gpa_col
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id", _sample_col(_GPA_SAMPLES).alias("raw_gpa")
     )
     return d.select("doc_id", "raw_gpa", gpa_col(F.col("raw_gpa")).alias("gpa"))
@@ -462,7 +445,7 @@ def _q_gpa_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pii_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F23 email masking (native)."""
     from document_parser_private_spark.functions.pii import mask_email_col
-    d = _docs(spark, sf_dir)
+    d = _read(spark, sf_dir, "documents")
     email = F.concat(
         F.lit("user"), F.col("doc_id").cast("string"), F.lit("@example.com")
     )
@@ -476,7 +459,7 @@ def _q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.streaming.stream import (
         windowed_event_counts,
     )
-    e = _tbl(spark, sf_dir, "events")
+    e = _read(spark, sf_dir, "events")
     out = windowed_event_counts(e)
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -488,13 +471,13 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprints via textstats.simhash_agg: one per-doc
     mapInArrow bit vote over 60-bit token hashes (exact DuckDB twin)."""
     from document_parser_private_spark.operators.textstats import simhash_agg
-    return simhash_agg(_docs(spark, sf_dir))
+    return simhash_agg(_read(spark, sf_dir, "documents"))
 
 
 def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN top-k (rows-only: bucket-restricted neighbor set)."""
     from document_parser_private_spark.operators.similarity import ann_topk
-    return ann_topk(_emb(spark, sf_dir), n_queries=5, k=10)
+    return ann_topk(_read(spark, sf_dir, "embeddings"), n_queries=5, k=10)
 
 
 _SKILLS_SAMPLES = [
@@ -513,7 +496,7 @@ def _q_skill_normalize_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.normalize import (
         normalize_skills_join,
     )
-    d = _docs(spark, sf_dir, spread=False).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id", _sample_col(_SKILLS_SAMPLES).alias("skills_text")
     )
     out = normalize_skills_join(d, fuzzy=False)
@@ -529,7 +512,7 @@ def _q_pii_anonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit/@-stripped so the only recognizer hits are the constructed
     ones, which the DuckDB twin re-derives with its own sha256."""
     from document_parser_private_spark.operators.pii import anonymize_op
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.lit("contact user"), F.col("doc_id").cast("string"),
@@ -543,7 +526,7 @@ def _q_pii_anonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pii_mask_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F23 in-text email masking as one native regexp_replace."""
     from document_parser_private_spark.operators.pii import mask_emails_col
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.lit("reach user"), F.col("doc_id").cast("string"),
@@ -579,7 +562,7 @@ def _q_resume_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.resume import (
         _education_udf, _experience_udf,
     )
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id",
         _sample_col(_EDU_SAMPLES).alias("edu_text"),
         _sample_col(_EXP_SAMPLES).alias("exp_text"),
@@ -622,7 +605,7 @@ def _q_skill_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.normalize import (
         normalize_skills_join,
     )
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id", _sample_col(_FUZZY_SKILL_SAMPLES).alias("skills_text")
     )
     out = normalize_skills_join(d, fuzzy=True)
@@ -638,7 +621,7 @@ def _q_jaccard_on_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.dedup import (
         jaccard_on_candidates,
     )
-    return jaccard_on_candidates(_docs(spark, sf_dir, spread=False))
+    return jaccard_on_candidates(_read(spark, sf_dir, "documents"))
 
 
 # Deterministic (pred, truth) text pairs exercising every token_set_ratio
@@ -667,7 +650,7 @@ def _q_fuzzy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF over the joined pairs). Pairs are pinned deterministic samples so
     the Levenshtein-family scorer gets a full value-hash oracle."""
     from document_parser_private_spark.operators.metrics import fuzzy_similarity
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id", "source",
         _sample_col([p for p, _ in _FUZZY_EVAL_PAIRS]).alias("pred_text"),
         _sample_col([t for _, t in _FUZZY_EVAL_PAIRS]).alias("truth_text"),
@@ -681,7 +664,7 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: deterministic seeded coarse quantizer + one distributed
     Lloyd step, probe 4/16 cells, exact re-rank inside probed cells."""
     from document_parser_private_spark.operators.similarity import ivf_topk
-    return ivf_topk(_emb(spark, sf_dir), n_queries=5, k=10)
+    return ivf_topk(_read(spark, sf_dir, "embeddings"), n_queries=5, k=10)
 
 
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -690,7 +673,7 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the same graph and resolves components with a recursive
     reachability CTE."""
     from document_parser_private_spark.operators.dedup import dedup_clusters
-    return dedup_clusters(_docs(spark, sf_dir, spread=False), threshold=0.5)
+    return dedup_clusters(_read(spark, sf_dir, "documents"), threshold=0.5)
 
 
 def _q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -698,7 +681,7 @@ def _q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> distinct candidate pairs. The shuffle carries only (doc_id,
     band_idx, band_key) — never text or shingles."""
     from document_parser_private_spark.operators.dedup import minhash_candidates
-    return minhash_candidates(_docs(spark, sf_dir, spread=False))
+    return minhash_candidates(_read(spark, sf_dir, "documents"))
 
 
 def _q_layout_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,7 +700,7 @@ def _q_layout_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~468 >= GUTTER_MIN, 6 spans per side >= COL_MIN_SPANS). Output:
     (doc_id, pos, text) with pos = layout reading order 0..11."""
     from document_parser_private_spark.operators.layout import layout_order_op
-    d = _docs(spark, sf_dir).select("doc_id")
+    d = _read(spark, sf_dir, "documents").select("doc_id")
     did = F.col("doc_id")
 
     def span_at(j):
@@ -767,7 +750,7 @@ def _q_ner_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates x broadcast gazetteer). DuckDB twin replays the same
     regexes + gazetteer IN-list."""
     from document_parser_private_spark.operators.ner import ner_extract
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id", _sample_col(_NER_SAMPLES).alias("text")
     )
     out = ner_extract(d)
@@ -783,7 +766,7 @@ def _q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality rules over the documents table: per-rule
     verdict columns + conjunctive keep (all native codegen)."""
     from document_parser_private_spark.operators.curation import quality_filter
-    out = quality_filter(_docs(spark, sf_dir))
+    out = quality_filter(_read(spark, sf_dir, "documents"))
     flags = ["ok_words", "ok_word_len", "ok_symbols", "ok_stopwords",
              "ok_bullets", "keep"]
     return out.select(
@@ -798,7 +781,7 @@ def _q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.curation import (
         stratified_sample,
     )
-    out = stratified_sample(_docs(spark, sf_dir), _SAMPLE_FRACTIONS,
+    out = stratified_sample(_read(spark, sf_dir, "documents"), _SAMPLE_FRACTIONS,
                             strata_col="lang", default_fraction=0.05)
     return out.select("doc_id", "lang")
 
@@ -809,7 +792,7 @@ def _q_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.curation import (
         cluster_representatives,
     )
-    return cluster_representatives(_docs(spark, sf_dir), threshold=0.5)
+    return cluster_representatives(_read(spark, sf_dir, "documents"), threshold=0.5)
 
 
 def _q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -819,7 +802,7 @@ def _q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.trainprep import (
         repetition_stats,
     )
-    d = _docs(spark, sf_dir).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat_ws(
             "\n",
@@ -838,10 +821,10 @@ def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.trainprep import (
         decontaminate,
     )
-    d = _docs(spark, sf_dir)
-    # the benchmark slice keeps 1/97th of the docs — read it unspread
-    # so it doesn't pay the corpus-side spread exchange a second time
-    bench = _docs(spark, sf_dir, spread=False).where(
+    d = _read(spark, sf_dir, "documents")
+    # the slice comes from the corpus read, so it shares its spread
+    # exchange instead of paying a second one
+    bench = d.where(
         F.pmod(F.col("doc_id"), F.lit(97)) == 0
     ).select(F.substring("text", 41, 400).alias("text"))
     out = decontaminate(d, bench, n=8)
@@ -857,7 +840,7 @@ def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.trainprep import (
         chunk_documents,
     )
-    return chunk_documents(_docs(spark, sf_dir), chunk_tokens=64,
+    return chunk_documents(_read(spark, sf_dir, "documents"), chunk_tokens=64,
                            overlap=16)
 
 
@@ -867,7 +850,7 @@ def _q_event_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     single shuffle, no range explosion). NULL columns where the user
     has no prior purchase."""
     from document_parser_private_spark.operators.asof import asof_join
-    ev = _tbl(spark, sf_dir, "events")
+    ev = _read(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts")
     purchases = ev.where(F.col("event_type") == "purchase").select(
@@ -884,7 +867,7 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.similarity import (
         semantic_dedup,
     )
-    out = semantic_dedup(_emb(spark, sf_dir), threshold=0.2)
+    out = semantic_dedup(_read(spark, sf_dir, "embeddings"), threshold=0.2)
     return out.select(
         "vec_id", F.col("keep").cast("int").alias("keep"), "dup_of",
     )
@@ -898,7 +881,7 @@ def _q_cross_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.dedup import (
         cross_corpus_dedup,
     )
-    d = _docs(spark, sf_dir, spread=False)
+    d = _read(spark, sf_dir, "documents")
     new = d.select((F.col("doc_id") + 10000).alias("doc_id"), "text")
     ref = d.where(F.pmod(F.col("doc_id"), F.lit(7)) == 0) \
         .select("doc_id", "text")
@@ -923,7 +906,7 @@ def _q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the md5/conv/bin register math runs per DISTINCT value instead of
     # per token instance (2.75M -> vocab-bounded rows at 50k docs) and
     # the corpus is tokenized once, not once per branch (PLANS.md §21).
-    tok = _docs(spark, sf_dir, spread=False).select(
+    tok = _read(spark, sf_dir, "documents").select(
         "source",
         F.explode(
             F.regexp_extract_all(F.col("text"), F.lit(WORD_RE), F.lit(0))
@@ -959,7 +942,7 @@ def _q_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_min_sketch,
     )
     from document_parser_private_spark.operators.textstats import WORD_RE
-    tok = _docs(spark, sf_dir).select(
+    tok = _read(spark, sf_dir, "documents").select(
         F.explode(
             F.regexp_extract_all(F.col("text"), F.lit(WORD_RE), F.lit(0))
         ).alias("token")
@@ -1000,7 +983,7 @@ def _q_zorder_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.functions.zorder import (
         zorder_code_col,
     )
-    d = _docs(spark, sf_dir)
+    d = _read(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         zorder_code_col(F.col("n_chars"), F.col("doc_id")).alias("zcode"),
@@ -1014,7 +997,7 @@ def _q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     back and summed per doc. The twin replays the identical merge loop
     with a recursive CTE over ranks (same trick as pack_sequences)."""
     from document_parser_private_spark.operators.bpe import bpe_token_counts
-    return bpe_token_counts(_docs(spark, sf_dir, spread=False)).select(
+    return bpe_token_counts(_read(spark, sf_dir, "documents")).select(
         "doc_id", "n_words", "n_bpe"
     )
 
@@ -1029,7 +1012,7 @@ def _q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantile_sketch,
     )
     return quantile_sketch(
-        _docs(spark, sf_dir, spread=False), value_col="n_chars", group_cols=["source"]
+        _read(spark, sf_dir, "documents"), value_col="n_chars", group_cols=["source"]
     )
 
 
@@ -1040,7 +1023,7 @@ def _q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.ranking import (
         inverted_index,
     )
-    return inverted_index(_docs(spark, sf_dir, spread=False), min_df=5, max_postings=20)
+    return inverted_index(_read(spark, sf_dir, "documents"), min_df=5, max_postings=20)
 
 
 def _q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1048,7 +1031,7 @@ def _q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     train add-0.5 smoothed bigram model on documents, score each doc's
     mean bigram log-prob + pseudo-perplexity."""
     from document_parser_private_spark.operators.lm import lm_score
-    return lm_score(_docs(spark, sf_dir, spread=False))
+    return lm_score(_read(spark, sf_dir, "documents"))
 
 
 def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1058,7 +1041,7 @@ def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.trainprep import (
         chunk_documents, pack_sequences,
     )
-    chunks = chunk_documents(_docs(spark, sf_dir), chunk_tokens=64,
+    chunks = chunk_documents(_read(spark, sf_dir, "documents"), chunk_tokens=64,
                              overlap=16)
     return pack_sequences(chunks, budget_tokens=200)
 
@@ -1068,7 +1051,7 @@ def _q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM / template-mining raw material): occurrence count + document
     frequency per surviving gram."""
     from document_parser_private_spark.operators.lm import ngram_counts
-    return ngram_counts(_docs(spark, sf_dir), n=3, min_count=5)
+    return ngram_counts(_read(spark, sf_dir, "documents"), n=3, min_count=5)
 
 
 _MIXTURE_WEIGHTS = {"en": 0.5, "de": 0.2, "fr": 0.3}
@@ -1082,7 +1065,7 @@ def _q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.curation import (
         mixture_sample,
     )
-    out = mixture_sample(_docs(spark, sf_dir, spread=False), _MIXTURE_WEIGHTS,
+    out = mixture_sample(_read(spark, sf_dir, "documents"), _MIXTURE_WEIGHTS,
                          source_col="lang")
     return out.select("doc_id", "lang")
 
@@ -1092,8 +1075,8 @@ def _q_part_outlier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose quantity is below 0.2x their part's average quantity —
     correlated subquery rewritten as one per-part window, then a
     broadcast join to part for the brand rollup."""
-    li = _tbl(spark, sf_dir, "lineitem")
-    part = _tbl(spark, sf_dir, "part")
+    li = _read(spark, sf_dir, "lineitem")
+    part = _read(spark, sf_dir, "part")
     wp = Window.partitionBy("l_partkey")
     flt = li.withColumn("aq", F.avg("l_quantity").over(wp)).where(
         F.col("l_quantity") < F.lit(0.2) * F.col("aq")
@@ -1116,7 +1099,7 @@ def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     path is exercised). DuckDB twin unrolls the same 5 iterations as
     a CTE chain — full hash oracle for an iterative algorithm."""
     from document_parser_private_spark.operators.graph import pagerank
-    d = _docs(spark, sf_dir, spread=False).select("doc_id")
+    d = _read(spark, sf_dir, "documents").select("doc_id")
     n = d.count()
     src = d.where(F.pmod(F.col("doc_id"), F.lit(11)) != 0)
     edges = src.select(
@@ -1139,7 +1122,7 @@ def _q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     total) — Spark's rollup() against DuckDB GROUP BY ROLLUP; subtotal
     levels surface as 'ALL'. One shuffle; Spark expands grouping sets
     map-side with partial aggregation."""
-    li = _tbl(spark, sf_dir, "lineitem")
+    li = _read(spark, sf_dir, "lineitem")
     # Sum an exact DECIMAL per-row term (not raw doubles): double sums
     # are order-dependent, and at larger SFs the accumulated ulp error
     # on the grand total can cross the 0.005 rounding boundary between
@@ -1168,7 +1151,7 @@ def _q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark SQL percentile() vs DuckDB quantile_cont — identical linear
     interpolation). Exact percentile shuffles the group's values; for
     the sketch-based scale path see hll_distinct's module note."""
-    d = _docs(spark, sf_dir)
+    d = _read(spark, sf_dir, "documents")
     q = d.groupBy("source").agg(
         F.expr(
             "percentile(n_chars, array(0.25D, 0.5D, 0.75D, 0.95D))"
@@ -1193,7 +1176,7 @@ def _q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.curation import (
         strip_boilerplate,
     )
-    d = _docs(spark, sf_dir, spread=False).select(
+    d = _read(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -1220,7 +1203,7 @@ def _q_bm25_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.ranking import (
         bm25_top_terms,
     )
-    return bm25_top_terms(_docs(spark, sf_dir, spread=False), k=3)
+    return bm25_top_terms(_read(spark, sf_dir, "documents"), k=3)
 
 
 def _q_incident_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1231,7 +1214,7 @@ def _q_incident_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst can hash-join and AQE can skew-split — instead of the
     per-key cross product a raw theta-join degrades to."""
     from document_parser_private_spark.operators.rangejoin import range_join
-    ev = _tbl(spark, sf_dir, "events")
+    ev = _read(spark, sf_dir, "events")
     ts_s = F.unix_timestamp(F.col("ts"))
     pts = ev.select("user_id", "event_id", "value", ts_s.alias("ts_s"))
     iv = ev.where(F.col("event_type") == "error").select(
@@ -1259,13 +1242,13 @@ def _q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.bloom import (
         bloom_build, bloom_prune,
     )
-    cust = _tbl(spark, sf_dir, "customer")
-    orders = _tbl(spark, sf_dir, "orders")
+    cust = _read(spark, sf_dir, "customer")
+    orders = _read(spark, sf_dir, "orders")
     seg = cust.where(F.col("c_mktsegment") == "BUILDING")
     bloom = bloom_build(seg, "c_custkey", m_bits=4096, k=3)
-    # _spread: the probe projection is 3 md5 hashes per row — heavy
-    # enough per-row work that the 2-task single-file scan serializes
-    # it (guide §2.5; measured 1.9 -> 1.1 s at 1.5M orders)
+    # the one spread outside _read: orders rows are narrow, but the
+    # probe computes 3 md5 hashes per row, which a 1-2 split scan runs
+    # on 1-2 cores (PLANS.md §24; 10x dir: 3.5 s spread, 5.5-6.0 s not)
     pruned = bloom_prune(
         _spread(orders.select("o_orderkey", "o_custkey"), spark),
         "o_custkey", bloom, m_bits=4096, k=3,
@@ -1286,7 +1269,7 @@ def _q_lexical_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.textstats import (
         lexical_stats,
     )
-    return lexical_stats(_docs(spark, sf_dir))
+    return lexical_stats(_read(spark, sf_dir, "documents"))
 
 
 def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1297,7 +1280,7 @@ def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.curation import (
         weighted_sample,
     )
-    out = weighted_sample(_docs(spark, sf_dir, spread=False), k=5, weight_col="n_chars",
+    out = weighted_sample(_read(spark, sf_dir, "documents"), k=5, weight_col="n_chars",
                           group_cols=["source"])
     return out.select("doc_id", "source", "sample_score",
                       F.col("sample_rank").cast("int").alias("sample_rank"))
@@ -1309,7 +1292,7 @@ def _q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     completions), one user-keyed hash aggregation per stage — no
     per-user buffers, no self-join explosion."""
     from document_parser_private_spark.operators.funnel import funnel
-    return funnel(_tbl(spark, sf_dir, "events"),
+    return funnel(_read(spark, sf_dir, "events"),
                   stages=["signup", "click", "purchase"])
 
 
@@ -1322,7 +1305,7 @@ def _q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.funnel import (
         cohort_retention,
     )
-    return cohort_retention(_tbl(spark, sf_dir, "events"),
+    return cohort_retention(_read(spark, sf_dir, "events"),
                             granularity="day")
 
 
@@ -1335,7 +1318,7 @@ def _q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.graph import (
         triangle_count,
     )
-    d = _docs(spark, sf_dir, spread=False).select("doc_id")
+    d = _read(spark, sf_dir, "documents").select("doc_id")
     n = d.count()
     edges = d.select(
         F.col("doc_id").alias("src"),
@@ -1361,7 +1344,7 @@ def _q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_parser_private_spark.operators.trainprep import (
         cluster_split,
     )
-    clusters = dedup_clusters(_docs(spark, sf_dir, spread=False), threshold=0.5)
+    clusters = dedup_clusters(_read(spark, sf_dir, "documents"), threshold=0.5)
     return cluster_split(clusters, val_frac=0.1)
 
 
@@ -1375,7 +1358,7 @@ def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         duplicated_substrings,
     )
     return duplicated_substrings(
-        _docs(spark, sf_dir).select("doc_id", "text"), n=10
+        _read(spark, sf_dir, "documents").select("doc_id", "text"), n=10
     )
 
 

@@ -59,16 +59,9 @@ sys.path.insert(0, %(repo)r)
 from document_parser_private_spark.session import get_spark
 from document_parser_private_spark.plans.pipeline import extract_pipeline
 cores = int(sys.argv[1])
-# One scan task per storage shard (openCost >= maxPartitionBytes defeats
-# small-file bin packing). The default packing glued the 64 equal shards
-# into 34 ragged splits at defaultParallelism=32 -> 2 waves with a
-# 2-task tail, idling ~47%% of the 32 cores (r5 32-core profile, its
-# probe since retired: bare scan+noop 34.8s -> 10.2s, full job 61.5s ->
-# 47.6s min, same window). At production scale shards are 128-512MB and always >= 1
-# task each, so the probe layout now matches the contract the pipeline
-# is designed for instead of a small-file accident that understates it.
-spark = get_spark(app_name=f"scale{cores}", cores=cores, shuffle_partitions=cores,
-                  extra_conf={"spark.sql.files.openCostInBytes": "16777216"})
+# get_spark's openCostInBytes = maxPartitionBytes reads one scan task per
+# storage shard (PLANS.md §20)
+spark = get_spark(app_name=f"scale{cores}", cores=cores, shuffle_partitions=cores)
 corpus = spark.read.parquet(%(corpus)r)
 n = corpus.count()
 def once():

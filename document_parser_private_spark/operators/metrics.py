@@ -1,10 +1,11 @@
 """Evaluation-metrics operators (SURVEY §2.4 A5, §2.3 J4).
 
-Set-based precision/recall/F1 of predicted vs ground-truth entity sets,
-joined on document id — the Spark form of the reference's
+Set-based precision/recall/F1 of predicted vs ground-truth entity sets
+— the Spark form of the reference's
 testing/accuracy_benchmark/evaluation_metrics.py:10-50 (pd.merge +
-set intersections), expressed as array_intersect/except + an equi-join,
-aggregated micro-style per group.
+set intersections), expressed as array_intersect/except over rows that
+already pair each prediction with its truth, aggregated micro-style per
+group.
 """
 
 from __future__ import annotations
@@ -16,26 +17,20 @@ from pyspark.sql.functions import pandas_udf
 
 
 def evaluation_metrics(
-    pred: DataFrame,
-    truth: DataFrame,
-    id_col: str = "doc_id",
-    set_col: str = "entities",
+    df: DataFrame,
+    pred_col: str,
+    true_col: str,
     group_col: str | None = None,
 ) -> DataFrame:
-    """pred(id, entities array), truth(id, entities array) ->
-    micro precision/recall/f1 (rounded to 6) per group (or global)."""
-    p = pred.select(
-        F.col(id_col),
+    """Rows holding a predicted and a ground-truth entity array ->
+    micro precision/recall/f1 (rounded to 6) per group (or global).
+    Pair each prediction with its truth first: a join on the document
+    id, or a window when the truth derives from the same table."""
+    j = df.select(
         *( [F.col(group_col)] if group_col else [] ),
-        F.col(set_col).alias("pred_set"),
-    )
-    t = truth.select(F.col(id_col), F.col(set_col).alias("true_set"))
-    j = p.join(t, id_col, "inner")
-    j = j.select(
-        *( [F.col(group_col)] if group_col else [] ),
-        F.size(F.array_intersect("pred_set", "true_set")).alias("tp"),
-        F.size(F.array_except("pred_set", "true_set")).alias("fp"),
-        F.size(F.array_except("true_set", "pred_set")).alias("fn"),
+        F.size(F.array_intersect(pred_col, true_col)).alias("tp"),
+        F.size(F.array_except(pred_col, true_col)).alias("fp"),
+        F.size(F.array_except(true_col, pred_col)).alias("fn"),
     )
     keys = [group_col] if group_col else []
     agg = j.groupBy(*keys).agg(

@@ -15,6 +15,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Half the host's physical memory in whole GiB (at least 1g): in
+    local mode the driver JVM holds the executors, and the Python
+    workers and the OS need the other half. SPARK_DRIVER_MEM overrides
+    it."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys_bytes // 2 >> 30)}g"
+
+
 def get_spark(
     app_name: str = "document_parser_private_spark",
     cores: int | None = None,
@@ -46,16 +56,19 @@ def get_spark(
         # amortize per-batch overhead; giant docs (~100KB spans) keep a
         # batch well under executor memory
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # local corpora are few-MB shards; the 128MB default packs the
         # whole scan into 2-3 map tasks and serializes the shuffle-write
-        # side. 16MB/64KB keeps scan parallelism ~cores at bench sizes
-        # while remaining sane for big files (cluster deployments override
-        # via spark-submit conf).
+        # side. openCost = maxPartitionBytes gives one task per shard
+        # (no small-file bin packing, PLANS.md §20) and never cuts a
+        # file below 16MB into byte ranges, so a single-row-group file is
+        # one split and the spread rule in __spark_entry__._read sees it
+        # (cluster deployments override via spark-submit conf).
         .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.files.openCostInBytes", "65536")
+        .config("spark.sql.files.openCostInBytes", "16m")
         # partitionOverwriteMode=dynamic -> idempotent overwrite-by-partition,
         # the checkpoint/resume correctness primitive (plans/checkpoint.py).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -6,6 +6,10 @@ cheap at bench scale, catastrophic at 100 TB. Run after composing
 operators; anything whose scan count exceeds the number of distinct
 tables it logically reads deserves a persist/checkpoint look.
 
+The session is `get_spark()`'s default (local[$SPARK_GRAFT_CPUS], or
+every core), so the spread exchanges that `__spark_entry__._read` adds
+are the ones bench.py and the tests see; `spread` counts them.
+
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
 
@@ -22,7 +26,7 @@ def main() -> None:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or list(entry.queries())
-    spark = get_spark(cores=8)
+    spark = get_spark()
     qs = entry.queries()
     rows = []
     for name in names:
@@ -32,12 +36,13 @@ def main() -> None:
                 ._jdf.queryExecution().executedPlan().toString()
             )
             rows.append((plan.count("FileScan"), plan.count("Exchange"),
-                         plan.count("BroadcastExchange"), name))
+                         plan.count("BroadcastExchange"),
+                         plan.count("RoundRobinPartitioning"), name))
         except Exception as exc:  # surface, keep sweeping
-            rows.append((-1, -1, -1, f"{name}  ERR {exc}"))
-    print(f"{'scans':>5} {'exch':>5} {'bcast':>5}  query")
-    for s, x, b, n in sorted(rows, reverse=True):
-        print(f"{s:5d} {x:5d} {b:5d}  {n}")
+            rows.append((-1, -1, -1, -1, f"{name}  ERR {exc}"))
+    print(f"{'scans':>5} {'exch':>5} {'bcast':>5} {'spread':>6}  query")
+    for s, x, b, r, n in sorted(rows, reverse=True):
+        print(f"{s:5d} {x:5d} {b:5d} {r:6d}  {n}")
 
 
 if __name__ == "__main__":
