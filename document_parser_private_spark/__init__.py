@@ -15,5 +15,3 @@ Layout:
 """
 
 __version__ = "0.1.0"
-
-SPANS_AS_OF = (2025, 7, 11)  # pinned 'as_of' date for "Present"/"Current"

@@ -96,9 +96,6 @@ LINK_FARM = [
     "https://a.example.com https://b.example.org https://c.example.net",
 ]
 
-DOC_TYPES = ("resume_text", "resume_rich", "resume_media",
-             "resume_boiler", "resume_2col", "edge")
-
 
 @dataclass
 class Span:

@@ -13,8 +13,6 @@ from pyspark.sql import functions as F
 
 DEFAULT_SALT = "secure_salt_value"
 
-EMAIL_PII_JRE = r"\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b"
-
 
 def pii_hash_col(value: Column, salt: str = DEFAULT_SALT) -> Column:
     """substring(sha2(value||salt, 256), 1, 8)."""

@@ -5,14 +5,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..semantics import PY_WS_JRE, PY_WS_JRE_INNER
+from ..semantics import PY_WS_JRE
 
 SKILL_SPLIT_JRE = r"[\n,;•/]+"
 # Java split() supports lookahead — reference entity_extractor.py:135,166,280
 ENTRY_SPLIT_JRE = r"\n(?=[A-Z][^a-z])"
-# Python twin (semantics.py parse_project_entry) uses re \s (Unicode) in the
-# bullet class, so the native class carries the full Python whitespace set.
-BULLET_STRIP_JRE = f"^[{PY_WS_JRE_INNER}•\\-*]+{PY_WS_JRE}*"
 
 
 def ws_trim(col: Column) -> Column:

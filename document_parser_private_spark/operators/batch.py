@@ -1,18 +1,24 @@
-"""The one (id, text) batch loop behind the analytics mapInArrow builders.
+"""The one (id, text) batch loop behind the analytics mapInArrow builders,
+and the worker-side helpers every Python batch body shares.
 
 A builder hands `map_docs` a per-document function; `map_docs` owns the
 single Python crossing (one MapInArrow node), the null-text contract and
 the Arrow encode. `tokens` and `round6` are the two value contracts the
-builders share.
+builders share. `pylist` and `forget_zip_importers` cut the two fixed
+costs a Python batch body pays: the per-value Arrow decode and the
+per-task zip-directory re-read.
 """
 
 from __future__ import annotations
 
 import re
+import sys
+import zipimport
 from decimal import ROUND_HALF_UP, Decimal
 from itertools import repeat
 from typing import Callable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
@@ -30,6 +36,37 @@ def round6(x: float) -> float:
     return float(Decimal(repr(x)).quantize(_Q6, ROUND_HALF_UP))
 
 
+def pylist(arr: pa.Array) -> list:
+    """arr.to_pylist(), equal in value and Python type, without one Arrow
+    Scalar per value.
+
+    String arrays (nulls included) and boolean and integer arrays with no
+    nulls go through numpy; numpy would turn an integer array with nulls
+    into floats, so that and every other type keep to_pylist()."""
+    t = arr.type
+    if (pa.types.is_string(t) or pa.types.is_large_string(t)
+            or ((pa.types.is_integer(t) or pa.types.is_boolean(t))
+                and not arr.null_count)):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    return arr.to_pylist()
+
+
+def forget_zip_importers() -> None:
+    """Drop the zipimporters from sys.path_importer_cache.
+
+    PySpark calls importlib.invalidate_caches() at the start of every
+    Python task, and on CPython 3.11 that makes each cached zipimporter
+    re-read its archive's central directory: 16 of them (pyspark.zip,
+    py4j, the spark-core jar) cost 0.1-0.2 s of CPU per task. Called at
+    a batch body's entry, it leaves a reused worker's next task nothing
+    to re-read. Safe: a later import re-creates the finder it needs, and
+    that finder reads the directory from zipimport's own cache."""
+    cache = sys.path_importer_cache
+    for key, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(key, None)
+
+
 def map_docs(df: DataFrame, id_col: str, text_col: str, out_ddl: str,
              per_doc: Callable[[str], Sequence[Sequence]]) -> DataFrame:
     """(id, *out_ddl) rows from ONE mapInArrow pass over (id, text).
@@ -44,13 +81,11 @@ def map_docs(df: DataFrame, id_col: str, text_col: str, out_ddl: str,
     types = [to_arrow_type(f.dataType) for f in out.fields]
 
     def build(batches):
-        import pyarrow as pa
-
         for b in batches:
+            forget_zip_importers()
             out_id: list = []
             cols: list[list] = [[] for _ in types]
-            for did, tx in zip(b.column(0).to_pylist(),
-                               b.column(1).to_pylist()):
+            for did, tx in zip(pylist(b.column(0)), pylist(b.column(1))):
                 emitted = per_doc(tx or "")
                 out_id.extend(repeat(did, len(emitted[0])))
                 for col, vals in zip(cols, emitted):

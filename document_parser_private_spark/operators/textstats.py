@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..semantics import PY_WS_JRE, PY_WS_JRE_INNER
-from .batch import map_docs, round6, tokens
+from .batch import forget_zip_importers, map_docs, pylist, round6, tokens
 
 # Tokenization whitespace for the textstats/dedup token contracts is the
 # explicit ASCII set below, identical in Java regex and RE2 (engine-native
@@ -154,6 +154,7 @@ def with_textstats(df: DataFrame, text_col: str = "text") -> DataFrame:
         import pyarrow.compute as pc
 
         for b in batches:
+            forget_zip_importers()
             t = b.column(text_col)
             low = pc.utf8_lower(t)
             tokens = pc.count_substring_regex(t, WORD_RE)
@@ -202,7 +203,7 @@ def with_textstats(df: DataFrame, text_col: str = "text") -> DataFrame:
             ]
             fp = [
                 None if v is None else _hl.md5(v.encode()).hexdigest()
-                for v in norm.to_pylist()
+                for v in pylist(norm)
             ]
             yield pa.record_batch(
                 list(b.columns) + [

@@ -67,10 +67,14 @@ class ExtractedDoc:
 def classify_keep(spans: list[dict]) -> tuple[list[dict], int]:
     """Stage 1 — per-span classify (order-free): drop boilerplate,
     re-kind media; ORIGINAL geometric offsets preserved for the layout
-    pass. Returns (kept, dropped)."""
+    pass. A null span counts as one dropped block, as the kernel has
+    always counted it. Returns (kept, dropped)."""
     out: list[dict] = []
     dropped = 0
     for s in spans:
+        if s is None:
+            dropped += 1
+            continue
         label = S.classify_span(s["kind"], s["text"] or "", s.get("media_ref"))
         if label == "boilerplate":
             dropped += 1

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from ..operators.resume import extract_all_fused_op
 
 HEAVY_BYTES = 8 * 1024  # ~3x the mean doc: above this, the giant-doc salt
-HEAVY_BUCKETS = 16
 
 FINAL_COLUMNS = (
     "doc_id", "clean_spans", "blocks_kept", "blocks_dropped", "sections",

@@ -61,7 +61,6 @@ PY_WS_CODEPOINTS = (
     0x2000, 0x2001, 0x2002, 0x2003, 0x2004, 0x2005, 0x2006, 0x2007,
     0x2008, 0x2009, 0x200A, 0x2028, 0x2029, 0x202F, 0x205F, 0x3000,
 )
-PY_WS_CHARS = "".join(chr(c) for c in PY_WS_CODEPOINTS)
 # Character class usable verbatim in Java regex (Spark) and RE2 (DuckDB).
 # Rendered as RANGES, not 29 singleton escapes: the long form measurably
 # collapses whole-stage-codegen performance when the pattern literal is
@@ -183,16 +182,6 @@ DATE_LINE_PATTERNS = (
     r"(?:(?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)\s+\d{4}|Present|Current)\b",
     r"\b\d{4}\s*[-–]\s*(?:\d{4}|Present|Current)\b",
     r"\b(?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)\s+\d{4}\b",
-)
-_COMPILED_DATE_LINES = tuple(re.compile(p, re.IGNORECASE) for p in DATE_LINE_PATTERNS)
-
-# single alternation equivalent of the three patterns above, usable with
-# Spark `rlike` for the native-expression implementation (P6 in SURVEY §2.2)
-DATE_LINE_RLIKE = (
-    r"(?i)(\b(Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)\s+\d{4}\s*[-–]\s*"
-    r"((Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)\s+\d{4}|Present|Current)\b)"
-    r"|(\b\d{4}\s*[-–]\s*(\d{4}|Present|Current)\b)"
-    r"|(\b(Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)\s+\d{4}\b)"
 )
 
 

@@ -23,6 +23,7 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
 from ..corpus import DOCS_DDL
+from ..operators.batch import forget_zip_importers
 from ..operators.resume import CLEAN_FIELDS, clean_and_sections, decode_spans
 
 _CLEAN_TYPE = T.StructType(CLEAN_FIELDS)
@@ -33,6 +34,7 @@ _CLEAN_ARROW = to_arrow_type(_CLEAN_TYPE)
 def _clean_and_sections_udf(spans: pa.Array) -> pa.Array:
     """The batch kernel (decode_spans + clean_and_sections) as a scalar
     Arrow UDF: one Python node, no entity extraction."""
+    forget_zip_importers()
     cols: list[list] = [[] for _ in CLEAN_FIELDS]
     for arr in decode_spans(spans):
         for col, v in zip(cols, clean_and_sections(arr)):

@@ -252,3 +252,47 @@ def test_pipeline_kernel_builds_only_requested_entities(corpus_df):
 def test_pipeline_rejects_unknown_columns(corpus_df):
     with pytest.raises(ValueError, match="experiences"):
         extract_pipeline(corpus_df, columns=("doc_id", "experiences"))
+
+
+def test_null_span_is_one_dropped_block(spark, tmp_path):
+    """A null element in `spans` is one dropped block, and the other
+    spans are kept, in the oracle, the batch pipeline and the stream."""
+    from document_parser_private_spark.corpus import DOCS_DDL
+    from document_parser_private_spark.streaming.stream import stream_extract
+
+    def span(text, offset):
+        return {"kind": "text", "text": text, "media_ref": None,
+                "offset": offset}
+
+    rows = [
+        {"doc_id": "mid", "spans": [span("Alice Smith", 0), None,
+                                    span("SKILLS\nPython, SQL", 1024)],
+         "byte_size": 1, "doc_type": "edge", "part": 0},
+        {"doc_id": "only", "spans": [None], "byte_size": 1,
+         "doc_type": "edge", "part": 0},
+    ]
+    (mid, only) = expected_rows(rows)
+    assert (mid["blocks_kept"], mid["blocks_dropped"]) == (2, 1)
+    assert (only["blocks_kept"], only["blocks_dropped"]) == (0, 1)
+    want = {e["doc_id"]: (e["blocks_kept"], e["blocks_dropped"],
+                          [(s["kind"], s["text"], s["offset"])
+                           for s in e["spans"]])
+            for e in (mid, only)}
+
+    def got(df):
+        return {r["doc_id"]: (r["blocks_kept"], r["blocks_dropped"],
+                              [(s["kind"], s["text"], s["offset"])
+                               for s in r["clean_spans"]])
+                for r in df.collect()}
+
+    df = spark.createDataFrame(rows, schema=DOCS_DDL)
+    assert got(extract_pipeline(df)) == want
+
+    in_dir = str(tmp_path / "in")
+    df.coalesce(1).write.parquet(in_dir)
+    q = (stream_extract(spark, in_dir).writeStream.format("memory")
+         .queryName("null_span_stream")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    assert got(spark.table("null_span_stream")) == want

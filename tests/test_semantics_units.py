@@ -197,6 +197,23 @@ def test_classify_span_rules():
     assert S.classify_span("text", "", None) == "boilerplate"
 
 
+@pytest.mark.parametrize(
+    "font_size,font_name,text,expected",
+    [
+        (12, "Times", "work history", True),       # size threshold
+        (11.9, "Times", "work history", False),
+        (10, "CMBX10", "work history", True),      # TeX bold font
+        (10, "cmbx10", "work history", False),     # prefix is case-sensitive
+        (10, "CMR10", "WORK history", True),       # any all-caps word
+        (10, "CMR10", "Work History 2020", False),  # digits are not upper
+        (10, "CMR10", "ÉTUDES", True),
+        (10, "CMR10", "", False),
+    ],
+)
+def test_is_heading_block(font_size, font_name, text, expected):
+    assert S.is_heading_block(font_size, font_name, text) is expected
+
+
 def test_pii_strategies():
     text = "mail john.doe@email.com or call 123-456-7890"
     hashed = S.anonymize_text(text, "hash")
