@@ -6,7 +6,9 @@ sort"; the reference itself only relies on implicit block order
 runs real layout INFERENCE over packed (y, x) offsets
 (offset = y*X_STRIDE + x): cluster jittered baselines into lines, detect
 a column gutter from the x distribution, sort column-major. Vectorized
-pandas UDF, semantics shared with the oracle.
+pandas UDF over semantics.layout_reading_order, the oracle's per-doc
+path; the extraction kernel runs its whole-batch twin
+(operators.resume.reading_order).
 """
 
 from __future__ import annotations
@@ -55,8 +57,9 @@ def layout_order_op(df: DataFrame, spans_col: str = "clean_spans") -> DataFrame:
     """Vectorized layout pass over span arrays: cluster lines by y
     proximity, detect a column gutter from the x distribution, emit spans
     in column-major reading order with offsets renumbered. The extraction
-    pipeline does not call this: its per-doc kernel
-    (operators.resume.clean_and_sections) runs the same inference after
-    classify, inside its one Arrow crossing.
+    pipeline does not call this: its kernel (operators.resume.clean_columns)
+    runs the same inference after classify, inside its one Arrow
+    crossing, as one numpy sort over the whole batch
+    (operators.resume.reading_order).
     """
     return df.withColumn(spans_col, _layout_order_udf(F.col(spans_col)))

@@ -2,10 +2,10 @@
 
 The FSM (reference parsing_engine/section_detector.py:31-107) carries
 mutable `current_section` state per line — inherently sequential *within*
-a document, so it cannot be a Catalyst expression. It runs inside the
-shared per-doc kernel (operators/resume.clean_and_sections), which is
-vectorized *across* documents: Arrow ships a batch of span arrays to the
-Python worker, and the per-doc loop runs over plain Python lists.
+a document, so it cannot be a Catalyst expression. It is the one per-doc
+loop of the shared kernel (operators/resume.clean_columns): classify and
+reading order run over the whole Arrow batch first, and the FSM then
+reads each doc's kept texts as a slice of one Python list.
 
 Output is a fixed-field struct (not a map): fixed keys are
 Catalyst-prunable — downstream stages that only need `sections.skills`
@@ -24,13 +24,8 @@ SECTIONS_TYPE = T.StructType(
 )
 
 
-def sections_of_span_list(spans) -> dict:
-    """FSM over the textual lines of one doc's (cleaned) spans."""
-    lines: list[str] = []
-    if spans is not None:
-        for s in spans:
-            if s["kind"] == "media-anchor":
-                continue
-            lines.extend((s["text"] or "").split("\n"))
-    secs = S.detect_sections(lines)
+def sections_of_texts(texts: list[str]) -> dict:
+    """FSM over the lines of one doc's kept textual spans, in reading
+    order."""
+    secs = S.detect_sections("\n".join(texts).split("\n") if texts else [])
     return {name: secs.get(name) for name in SECTIONS_FIELDS}

@@ -2,11 +2,15 @@
 
 Computes, per document, the golden expected outputs the Spark pipeline must
 match (BASELINE.json per-row invariant: span-sequence equality on
-(kind, text, media_ref, order)). Shares the deterministic core with the
-pipeline's per-doc kernel via ``semantics`` (the kernel calls
-classify_and_emit below), so behavior is defined exactly once; the
-*native-Spark* stages (contact / summary / certifications regex
-extraction) are independent implementations tested against this oracle.
+(kind, text, media_ref, order)). Stages 1-3 run here per span, over
+``semantics``; the pipeline's kernel (operators/resume.clean_columns)
+runs the same rules over whole Arrow batches — the same classify
+patterns in RE2, the same reading order as one numpy sort — and is
+property-tested equal to this path (tests/test_classify_batch.py,
+tests/test_worker_helpers.py). Stage 4 and the entity extractors are
+shared code. The *native-Spark* stages (contact / summary /
+certifications regex extraction) are independent implementations tested
+against this oracle.
 
 Stages (mirrors plans/pipeline.py):
   1. classify: media-anchor / boilerplate / content; drop boilerplate;

@@ -16,7 +16,7 @@ partition; parquet is used because the sandbox ships no Iceberg runtime):
 Plan per commit group: the fused extraction kernel runs ONCE (`part`
 crosses it as an untouched Arrow column, so nothing joins back to the
 input) and its result is written once. The kernel is asked for the
-committed columns only (COMMITTED_COLUMNS): it runs decode, classify and
+committed columns only (COMMITTED_COLUMNS): it runs classify and
 layout, the section FSM and skills, and never parses the education,
 experience or projects entities, which a commit does not write. The
 group's metrics are then aggregated from the committed
@@ -60,6 +60,10 @@ METRICS_SCHEMA = (
     "part int, doc_count long, blocks_kept long, blocks_dropped long, "
     "parse_failures long, run_id string"
 )
+# The committed columns the metrics aggregate reads back. Reading them
+# with a known schema spares every commit group a one-task job that
+# infers the schema from a parquet footer.
+COUNTS_SCHEMA = "part int, blocks_kept int, blocks_dropped int"
 # The pipeline columns a commit writes (the nested ones as JSON).
 COMMITTED_COLUMNS = (
     "doc_id", "blocks_kept", "blocks_dropped", "clean_spans", "sections",
@@ -212,7 +216,8 @@ def run_with_checkpoint(
             # 2. metrics append, aggregated from the group's committed
             # partitions only
             committed = (
-                spark.read.option("basePath", extracted)
+                spark.read.schema(COUNTS_SCHEMA)
+                .option("basePath", extracted)
                 .parquet(*(f"{extracted}/part={p}" for p in group))
                 .groupBy("part")
                 .agg(

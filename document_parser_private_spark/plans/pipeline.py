@@ -2,10 +2,11 @@
 
     documents(doc_id, spans, [byte_size, part])
       -> salted repartition by doc byte-size bucket   (skew)
-      -> ONE mapInArrow pass per doc:                  (Python, narrow)
-           classify content/boilerplate/media-anchor,
-           layout inference + offset renumbering,
-           section FSM, then only the entities among
+      -> ONE mapInArrow pass per doc batch:            (Python, narrow)
+           classify content/boilerplate/media-anchor
+           (RE2 over the batch's spans), layout inference +
+           offset renumbering (one numpy sort), then per doc
+           the section FSM and only the entities among
            skills/education/experience/projects that the caller's
            `columns` name; `part`, when present, crosses as an
            untouched Arrow column
@@ -16,8 +17,8 @@ further shuffle at any scale; throughput scales linearly with executors
 (the ≥0.8 N->4N efficiency target). Skew from giant PDFs is handled by
 routing heavy docs (byte_size above threshold) across dedicated hash
 buckets so no single task owns several giants. streaming.stream_extract
-runs the same per-doc kernel (operators/resume.clean_and_sections)
-without the entity columns.
+runs the same kernel (operators/resume.clean_columns) without the entity
+columns.
 """
 
 from __future__ import annotations

@@ -266,45 +266,65 @@ def detect_sections(lines: list[str]) -> dict[str, str]:
 # The reference has no boilerplate stripper (it parses single resumes); the
 # north_star mandates one (Boilerpipe/Readability-style link-density +
 # block-tag scoring). These rules are therefore defined HERE as the
-# authoritative semantics, run by the extraction kernel (operators/
-# resume.clean_and_sections, batch and streaming) and by the oracle through
-# the same classify_span. Every rule is a deterministic regex/ratio on the
-# span text.
+# authoritative semantics. classify_span is the per-span reference the
+# oracle runs; the extraction kernel (operators/resume.classify_spans,
+# batch and streaming) runs the same four patterns over whole Arrow
+# batches with RE2. Every rule is a deterministic regex/ratio on the span
+# text.
 
-# Pattern constraints:
-#   - compiled with re.ASCII so \s \S \d \w \b are the ASCII classes;
-#     the classification token syntax is intentionally ASCII — see the
-#     whitespace contract above;
-#   - `.` is spelled [^\n] (Python-dot excludes only \n), so a JVM-regex
-#     port of a pattern keeps the same meaning;
+# Engine-neutral spelling: each pattern means the same in Python re (with
+# re.ASCII) and in RE2 (pyarrow.compute), so the oracle and the kernel
+# read one string with one set of matches:
+#   - no inline (?i): RE2 folds case over Unicode (U+212A matches k, U+017F
+#     matches s), so letters are ASCII case classes from _ci;
+#   - \s and \S are spelled _WS / _NWS, Python's ASCII \s set (RE2's \s
+#     lacks \x0b); \d \w \b are ASCII on both engines;
+#   - `.` is spelled [^\n] (Python-dot excludes only \n), which a JVM-regex
+#     port also keeps;
 #   - input is pre-stripped with the FULL Python whitespace set, so the
-#     ^\s*/\s*$ anchoring never sees exotic whitespace.
+#     ^\s*/\s*$ anchoring never sees exotic whitespace, and `$` never
+#     meets the trailing newline Python's `$` would also match before.
+# tests/test_classify_batch.py pins the batch classify to classify_span
+# and these patterns to their earlier (?i)/\s spelling.
+_WS_CHARS = r"\t\n\x0b\f\r "
+_WS = f"[{_WS_CHARS}]"
+_NWS = f"[^{_WS_CHARS}]"
+
+
+def _ci(word: str) -> str:
+    """`word` with every letter as an ASCII case class: "ab" -> "[Aa][Bb]"."""
+    return "".join(f"[{c.upper()}{c.lower()}]" if c.isalpha() else c
+                   for c in word)
+
+
 PAGE_FURNITURE_PAT = (
-    r"(?i)^\s*("
-    r"page\s+\d+(\s+of\s+\d+)?"  # Page 3 of 12
-    r"|\d+\s*/\s*\d+"  # 3 / 12
+    rf"^{_WS}*("
+    rf"{_ci('page')}{_WS}+\d+({_WS}+{_ci('of')}{_WS}+\d+)?"  # Page 3 of 12
+    rf"|\d+{_WS}*/{_WS}*\d+"  # 3 / 12
     r"|\d{1,4}"  # bare page number
     r"|[-_=*•.·]{3,}"  # separator rules
-    r"|(©|\(c\)|copyright)\s[^\n]*"  # copyright lines
-    r"|all\s+rights\s+reserved[^\n]*"
-    r"|confidential(\s+document)?"
-    r"|generated\s+by\s+\S+"
-    r"|downloaded\s+from\s+\S+"
-    r")\s*$"
+    rf"|(©|\({_ci('c')}\)|{_ci('copyright')}){_WS}[^\n]*"  # copyright lines
+    rf"|{_ci('all')}{_WS}+{_ci('rights')}{_WS}+{_ci('reserved')}[^\n]*"
+    rf"|{_ci('confidential')}({_WS}+{_ci('document')})?"
+    rf"|{_ci('generated')}{_WS}+{_ci('by')}{_WS}+{_NWS}+"
+    rf"|{_ci('downloaded')}{_WS}+{_ci('from')}{_WS}+{_NWS}+"
+    rf"){_WS}*$"
 )
 NAV_MENU_PAT = (
     # >=3 short title-case tokens separated by | or • : "Home | About | Jobs"
-    r"^\s*[A-Z][\w]{1,14}(\s*[|•]\s*[A-Z][\w]{1,14}){2,}\s*$"
+    rf"^{_WS}*[A-Z]\w{{1,14}}({_WS}*[|•]{_WS}*[A-Z]\w{{1,14}}){{2,}}{_WS}*$"
 )
+_LINK_TLDS = "|".join(map(_ci, ("com", "org", "net", "io", "dev", "co")))
 LINK_TOKEN_PAT = (
-    r"(?i)^(https?://\S+|www\.\S+|\S+\.(com|org|net|io|dev|co)(/\S*)?)$"
+    rf"^({_ci('https')}?://{_NWS}+|{_ci('www')}\.{_NWS}+"
+    rf"|{_NWS}+\.({_LINK_TLDS})(/{_NWS}*)?)$"
 )
 CONTACT_LINE_PAT = (
-    r"(?i)(\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}\b"  # email
-    r"|\b\d{3}[-.\s]?\d{3}[-.\s]?\d{4}\b"  # phone
-    r"|\(\d{3}\)\s*\d{3}[-.\s]?\d{4}"  # (123) 456-7890
-    r"|linkedin\.com/(in|pub)/[A-Za-z0-9-]+"
-    r"|github\.com/[A-Za-z0-9-]+)"
+    r"(\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}\b"  # email
+    rf"|\b\d{{3}}[-.{_WS_CHARS}]?\d{{3}}[-.{_WS_CHARS}]?\d{{4}}\b"  # phone
+    rf"|\(\d{{3}}\){_WS}*\d{{3}}[-.{_WS_CHARS}]?\d{{4}}"  # (123) 456-7890
+    rf"|{_ci('linkedin')}\.{_ci('com')}/({_ci('in')}|{_ci('pub')})/[A-Za-z0-9-]+"
+    rf"|{_ci('github')}\.{_ci('com')}/[A-Za-z0-9-]+)"
 )
 
 PAGE_FURNITURE_RE = re.compile(PAGE_FURNITURE_PAT, re.ASCII)
@@ -312,14 +332,14 @@ NAV_MENU_RE = re.compile(NAV_MENU_PAT, re.ASCII)
 LINK_TOKEN_RE = re.compile(LINK_TOKEN_PAT, re.ASCII)
 CONTACT_LINE_RE = re.compile(CONTACT_LINE_PAT, re.ASCII)
 
-# Short-circuit gates for the per-span classify hot loop (extraction
-# headline): each gate is IMPLIED by its full pattern — every
-# CONTACT_LINE_RE alternative requires an '@', a digit, or a
-# linkedin/github domain; every LINK_TOKEN_RE alternative requires a
-# '.' or '://'. A gate miss therefore proves the full regex cannot
-# match, and the (much costlier) alternation scan is skipped for the
-# dominant plain-prose case. Values are unchanged by construction —
-# pinned by tests/test_classify_property.py over the full span corpus.
+# Short-circuit gate for the per-span classify_span: it is IMPLIED by
+# CONTACT_LINE_RE — every alternative requires an '@', a digit, or a
+# linkedin/github domain — so a gate miss proves the full regex cannot
+# match, and the costlier alternation scan is skipped for plain prose
+# (likewise every LINK_TOKEN_RE alternative requires a '.' or '://').
+# Values are unchanged by construction; the batch classify, which runs
+# no gate, is pinned equal to classify_span by
+# tests/test_classify_batch.py.
 CONTACT_GATE_RE = re.compile(r"[@0-9]|linkedin\.com|github\.com", re.I)
 
 LINK_DENSITY_THRESHOLD = 0.5

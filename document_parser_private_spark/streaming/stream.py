@@ -2,7 +2,7 @@
 
 The reference is strictly batch (SURVEY §2.9) and the north_rule targets
 batch Iceberg snapshots, but the extraction transforms are all narrow
-per-document maps — so the batch pipeline's per-doc kernel runs unchanged
+per-document maps — so the batch pipeline's kernel runs unchanged
 in a streaming query (`readStream` on a documents directory → kernel →
 `writeStream`). This module provides the micro-batch ingestion path a
 continuously-fed 100 TB corpus would use (file-source backpressure via
@@ -20,29 +20,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.pandas.types import to_arrow_type
 
 from ..corpus import DOCS_DDL
 from ..operators.batch import forget_zip_importers
-from ..operators.resume import CLEAN_FIELDS, clean_and_sections, decode_spans
-
-_CLEAN_TYPE = T.StructType(CLEAN_FIELDS)
-_CLEAN_ARROW = to_arrow_type(_CLEAN_TYPE)
+from ..operators.resume import CLEAN_ARROW, CLEAN_FIELDS, clean_columns
 
 
-@arrow_udf(_CLEAN_TYPE)
+@arrow_udf(T.StructType(CLEAN_FIELDS))
 def _clean_and_sections_udf(spans: pa.Array) -> pa.Array:
-    """The batch kernel (decode_spans + clean_and_sections) as a scalar
-    Arrow UDF: one Python node, no entity extraction."""
+    """The batch kernel (clean_columns) as a scalar Arrow UDF: one
+    Python node, no entity extraction."""
     forget_zip_importers()
-    cols: list[list] = [[] for _ in CLEAN_FIELDS]
-    for arr in decode_spans(spans):
-        for col, v in zip(cols, clean_and_sections(arr)):
-            col.append(v)
-    return pa.StructArray.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, _CLEAN_ARROW)],
-        fields=list(_CLEAN_ARROW),
-    )
+    clean, _ = clean_columns(spans)
+    return pa.StructArray.from_arrays(clean, fields=list(CLEAN_ARROW))
 
 
 def stream_extract(
@@ -51,7 +41,7 @@ def stream_extract(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """readStream(documents dir) -> classify -> layout -> sections, via
-    the batch pipeline's per-doc kernel (operators/resume.py).
+    the batch pipeline's kernel (operators/resume.clean_columns).
 
     No shuffle anywhere: every micro-batch is a pure narrow map, so the
     query needs no state store and sustains source-rate throughput.

@@ -4,7 +4,7 @@ identical to an uninterrupted run."""
 
 import os
 import re
-from collections import defaultdict
+from collections import Counter, defaultdict
 
 import pytest
 
@@ -248,6 +248,16 @@ def test_commit_group_jobs_are_labelled(traced_run):
     assert labels <= seen
     assert seen <= labels | {"caller's label"}
     assert traced_run["description_after"] == "caller's label"
+
+
+def test_commit_group_job_counts(traced_run):
+    """Each commit group runs six jobs. Read back with no schema, the
+    committed counts would add a seventh that infers it from a parquet
+    footer."""
+    rid = traced_run["run_id"]
+    per_label = Counter(traced_run["jobs"].values())
+    assert [per_label[f"checkpoint run={rid} parts={g}"]
+            for g in ([0, 1, 2], [3, 4, 5], [6, 7])] == [6, 6, 6], per_label
 
 
 def test_broken_ledger_is_not_read_as_empty(spark, corpus_df, tmp_path):

@@ -15,6 +15,8 @@ def test_thread_groups():
     assert g("C2 CompilerThre") == g("C1 CompilerThre") == "jvm_jit"
     assert g("Executor task l") == "jvm_exec"
     assert g("GC Thread#3") == g("G1 Conc#0") == "jvm_gc"
+    assert (g("Thread-4") == g("dag-scheduler-e") == g("ResultQueryStag")
+            == g("shuffle-exchang") == g("spark-listener-") == "jvm_driver")
     assert g("VM Thread") is None
 
 

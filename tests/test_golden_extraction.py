@@ -160,10 +160,13 @@ def test_doc_entities_runs_only_the_wanted_extractors(corpus_rows,
     from document_parser_private_spark import semantics as S
     from document_parser_private_spark.operators import resume
 
+    import pyarrow as pa
+
     names = tuple(resume.ENTITY_TYPES)
     assert names == ("skills", "education", "experience", "projects")
-    sections = [resume.clean_and_sections(r["spans"])[3]
-                for r in corpus_rows]
+    spans_type = resume.CLEAN_ARROW.field("clean_spans").type
+    _, sections = resume.clean_columns(
+        pa.array([r["spans"] for r in corpus_rows], spans_type))
     full = [resume.doc_entities(s, names, {}, {}) for s in sections]
 
     extractors = {

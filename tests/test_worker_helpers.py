@@ -1,8 +1,9 @@
-"""The Python-worker helpers the batch bodies share (operators/batch.py):
-`pylist` equals Arrow's to_pylist() in value and Python type,
-`decode_spans` equals the nested ListArray.to_pylist() on null, empty
-and sliced arrays, and `forget_zip_importers` leaves zip imports
-working. No Spark session: these run inside the worker."""
+"""The Python-worker helpers the batch bodies share (operators/batch.py)
+and the extraction kernel: `pylist` equals Arrow's to_pylist() in value
+and Python type, `clean_columns` equals the oracle's per-doc path on
+null, empty and sliced arrays and on null rows that still span values,
+and `forget_zip_importers` leaves zip imports working. No Spark session:
+these run inside the worker."""
 
 import importlib
 import sys
@@ -15,8 +16,13 @@ from document_parser_private_spark.operators.batch import (
     forget_zip_importers,
     pylist,
 )
+from document_parser_private_spark import oracle
 from document_parser_private_spark.operators.layout import SPAN_TYPE
-from document_parser_private_spark.operators.resume import decode_spans
+from document_parser_private_spark.operators.resume import (
+    CLEAN_ARROW,
+    clean_columns,
+)
+from document_parser_private_spark.operators.sections import SECTIONS_FIELDS
 from pyspark.sql.pandas.types import to_arrow_type
 
 SPANS_ARROW = to_arrow_type(SPAN_TYPE)
@@ -57,39 +63,57 @@ def test_pylist_equals_to_pylist(strs, i32, i64, bools, large):
                   arr.slice(1, len(arr) - 2).to_pylist())
 
 
+LINES = st.sampled_from([
+    "Page 3 of 12", "SKILLS", "Experience", "Python, SQL", "Home | About | Jobs",
+    "www.a.com www.b.org x.io", "a@b.co", "\u00a9 2024 x", "\u3000", "\n",
+])
 SPAN = st.fixed_dictionaries({
-    "kind": st.none() | st.sampled_from(["text", "heading", "image", ""]),
-    "text": st.none() | TEXT,
+    "kind": st.none() | st.sampled_from(["text", "heading", "image",
+                                         "media-anchor", ""]),
+    "text": st.none() | TEXT | LINES,
     "media_ref": st.none() | st.sampled_from(["", "img/1.png"]),
-    "offset": st.none() | st.integers(0, 2 ** 31 - 1),
+    "offset": st.none() | st.integers(-2 ** 31, 2 ** 31 - 1),
 })
-DOCS = st.lists(st.none() | st.lists(st.none() | SPAN, max_size=5),
+DOCS = st.lists(st.none() | st.lists(st.none() | SPAN, max_size=6),
                 max_size=8)
 
 
-def _reference(list_array):
-    """The nested decode decode_spans replaces."""
-    return list_array.to_pylist()
+def _oracle_row(spans):
+    """The oracle's per-doc path: (clean_spans, blocks_kept,
+    blocks_dropped, sections); a null row keeps no spans and has NULL
+    counts."""
+    clean, kept, dropped = ([], None, None) if spans is None \
+        else oracle.classify_and_emit(spans)
+    secs = oracle.sections_of(clean)
+    return clean, kept, dropped, {f: secs.get(f) for f in SECTIONS_FIELDS}
+
+
+def _check_kernel(arr):
+    cols, secs = clean_columns(arr)
+    assert [c.type for c in cols] == [f.type for f in CLEAN_ARROW]
+    got = list(zip(*(c.to_pylist() for c in cols)))
+    want = [_oracle_row(r) for r in arr.to_pylist()]
+    assert got == want
+    assert secs == [w[3] for w in want]
 
 
 @settings(max_examples=80, deadline=None)
 @given(DOCS, st.data())
-def test_decode_spans_equals_nested_to_pylist(docs, data):
+def test_clean_columns_equals_oracle_per_doc(docs, data):
+    """clean_columns equals the oracle per doc on the whole array, on a
+    slice of it, and with rows nulled by a validity mask while their
+    offsets still span values."""
     arr = pa.array(docs, SPANS_ARROW)
-    _check_decode(arr)
+    _check_kernel(arr)
     start = data.draw(st.integers(0, len(arr)))
     length = data.draw(st.integers(0, len(arr) - start))
-    _check_decode(arr.slice(start, length))
-
-
-def _check_decode(arr):
-    got, want = decode_spans(arr), _reference(arr)
-    assert got == want
-    for g_row, w_row in zip(got, want):
-        for g, w in zip(g_row or (), w_row or ()):
-            if w is not None:
-                assert ([type(v) for v in g.values()]
-                        == [type(v) for v in w.values()])
+    _check_kernel(arr.slice(start, length))
+    mask = data.draw(st.lists(st.booleans(), min_size=len(arr),
+                              max_size=len(arr)))
+    masked = pa.ListArray.from_arrays(arr.offsets, arr.values,
+                                      mask=pa.array(mask, pa.bool_()))
+    _check_kernel(masked)
+    _check_kernel(masked.slice(start, length))
 
 
 def test_forget_zip_importers_keeps_zip_imports_working(tmp_path,

@@ -12,8 +12,11 @@ from /proc and for this process's own tree only:
   its workers, with the CPU of workers reaped during the pass;
 - ``jvm_jit``, ``jvm_exec``, ``jvm_gc``: the JVM's C1/C2 compiler threads,
   executor task threads and GC threads;
+- ``jvm_driver``: the driver's control-plane threads: py4j's ``Thread-N``
+  (the Python driver's calls), the DAG scheduler, the adaptive query
+  stage and shuffle-exchange threads and the listener bus;
 - ``jvm_other``: the rest of the JVM's CPU (its process total less the
-  three groups), which also absorbs what a thread burnt after the last
+  four groups), which also absorbs what a thread burnt after the last
   sample before it exited; threads are sampled every ``SAMPLE_S``;
 - ``other``: any other process in the tree.
 
@@ -37,12 +40,15 @@ from perfbench import procstat  # noqa: E402
 
 SAMPLE_S = 0.5
 GROUPS = ("driver_py", "workers_py", "jvm_jit", "jvm_exec", "jvm_gc",
-          "jvm_other", "other")
+          "jvm_driver", "jvm_other", "other")
 # JVM thread names (their first 15 characters) -> group
 THREAD_PREFIXES = (
     ("C1 CompilerThre", "jvm_jit"), ("C2 CompilerThre", "jvm_jit"),
     ("Executor task l", "jvm_exec"),
     ("GC Thread", "jvm_gc"), ("G1 ", "jvm_gc"),
+    ("Thread-", "jvm_driver"), ("dag-scheduler-e", "jvm_driver"),
+    ("ResultQueryStag", "jvm_driver"), ("shuffle-exchang", "jvm_driver"),
+    ("spark-listener-", "jvm_driver"),
 )
 
 
