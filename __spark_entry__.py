@@ -213,9 +213,11 @@ def _q_distinct_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup over a corpus with synthetic duplicates (doc ∪ doc+10^6)."""
     from document_parser_private_spark.operators.dedup import exact_dedup
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    dup = d.union(
-        d.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
+    # one read: each row emits itself and its synthetic duplicate
+    dup = _read(spark, sf_dir, "documents").select(
+        F.explode(F.array("doc_id", F.col("doc_id") + 1000000))
+        .alias("doc_id"),
+        "text",
     )
     return exact_dedup(dup)
 

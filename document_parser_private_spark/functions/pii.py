@@ -19,19 +19,6 @@ def pii_hash_col(value: Column, salt: str = DEFAULT_SALT) -> Column:
     return F.substring(F.sha2(F.concat(value, F.lit(salt)), 256), 1, 8)
 
 
-def anonymize_hash_col(text: Column, entity_type: str, pattern: str,
-                       salt: str = DEFAULT_SALT) -> Column:
-    """Replace occurrences of the first value matching `pattern` with
-    [TYPE_hash8] (native single-entity variant; the multi-entity
-    left-to-right pass with overlap handling is operators/pii.py).
-    """
-    value = F.regexp_extract(text, pattern, 0)
-    replacement = F.concat(
-        F.lit(f"[{entity_type}_"), pii_hash_col(value, salt), F.lit("]")
-    )
-    return F.when(value != "", F.replace(text, value, replacement)).otherwise(text)
-
-
 def mask_email_col(value: Column) -> Column:
     """j***@domain masking (pii_handler.py:52-60)."""
     at = F.locate("@", value)

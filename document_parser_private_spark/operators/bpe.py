@@ -1,8 +1,8 @@
 """Deterministic byte-pair-encoding tokenizer (subword tokens).
 
 Training pipelines budget text in MODEL tokens, not regex words; this
-module provides the subword path the regex tokenizer
-(textstats.bpe_token_count_col) stands in for:
+module provides the subword path the regex pre-tokenizer count
+(textstats.with_textstats `bpe_tokens`) stands in for:
 
   bpe_encode_words — apply a merges table to a vocabulary of words
                      (canonical priority merging: repeatedly merge the

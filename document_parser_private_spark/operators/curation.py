@@ -134,48 +134,47 @@ def strip_boilerplate(df: DataFrame, min_docs: int = 10,
          partial distinct keeps hot lines from flooding the exchange),
          thresholded to the boilerplate dictionary — SMALL by
          construction (only lines repeated across >= min_docs docs).
-      2. broadcast LEFT ANTI join per line + one doc-keyed regroup to
-         rebuild text in original line order.
-    Docs whose every line is boilerplate come back with clean_text ''
-    (left join against the input keeps the row).
+      2. broadcast LEFT join per line that marks the dictionary lines,
+         then one doc-keyed regroup: n_lines, n_removed (the marked
+         lines) and clean_text (the unmarked lines in original order)
+         from the same rows. Every doc keeps its row by construction: a
+         doc whose every line is boilerplate gets clean_text '', and a
+         null text (one posexplode_outer row, no line) gets NULL counts
+         and ''.
 
     Returns (id, n_lines, n_removed, clean_text).
     """
     lines = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.col(text_col), "\n", -1)).alias(
+        F.col(id_col),
+        F.posexplode_outer(F.split(F.col(text_col), "\n", -1)).alias(
             "pos", "line"
         ),
     )
     bp = (
         lines.where(F.length("line") > 0)
         .groupBy("line")
-        .agg(F.countDistinct("_id").alias("_nd"))
+        .agg(F.countDistinct(id_col).alias("_nd"))
         .where(F.col("_nd") >= min_docs)
-        .select("line")
+        .select("line", F.lit(True).alias("_bp"))
     )
-    kept = lines.join(F.broadcast(bp), "line", "left_anti")
-    rebuilt = kept.groupBy("_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda s: s["line"],
-            ),
-            "\n",
-        ).alias("clean_text"),
-        F.count(F.lit(1)).alias("_n_kept"),
-    )
-    n_lines = F.size(F.split(F.col(text_col), "\n", -1)).cast("long")
+    kept = F.when(F.col("_bp").isNull(), F.struct("pos", "line"))
     return (
-        df.select(F.col(id_col).alias("_id"), n_lines.alias("n_lines"))
-        .join(rebuilt, "_id", "left")
+        lines.join(F.broadcast(bp), "line", "left")
+        .groupBy(id_col)
+        .agg(
+            (F.max("pos") + 1).cast("long").alias("n_lines"),
+            F.count("_bp").alias("_n_bp"),
+            F.array_join(
+                F.transform(F.array_sort(F.collect_list(kept)),
+                            lambda s: s["line"]),
+                "\n",
+            ).alias("clean_text"),
+        )
         .select(
-            F.col("_id").alias(id_col),
-            "n_lines",
-            (
-                F.col("n_lines") - F.coalesce(F.col("_n_kept"), F.lit(0))
-            ).cast("long").alias("n_removed"),
-            F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
+            id_col, "n_lines",
+            F.when(F.col("n_lines").isNotNull(), F.col("_n_bp"))
+            .alias("n_removed"),
+            "clean_text",
         )
     )
 
@@ -223,7 +222,8 @@ def mixture_sample(df: DataFrame, weights: dict[str, float],
     Rows whose source has no (positive) weight are dropped.
 
     Fully declarative and reproducible: the per-source counts collapse
-    to one tiny aggregate (|sources| rows) that stays on the cluster —
+    to one tiny aggregate (|sources| rows) that stays on the cluster; T
+    is a window min over those rows, so the aggregate is computed once —
     rates ride a broadcast join, and row selection is the same
     md5-bucket filter as stratified_sample (rerun-identical, no RNG,
     no shuffle of the fact table). floor() is applied to the bucket
@@ -240,11 +240,9 @@ def mixture_sample(df: DataFrame, weights: dict[str, float],
         .withColumn("w", wexpr)
         .where(F.col("w") > 0)
     )
-    t = counts.agg(F.min(F.col("n") / F.col("w")).alias("t"))
-    rates = counts.crossJoin(F.broadcast(t)).select(
-        source_col,
-        (F.col("w") * F.col("t") / F.col("n")).alias("rate"),
-    )
+    t = F.min(F.col("n") / F.col("w")).over(Window.partitionBy())
+    rates = counts.select(
+        source_col, (F.col("w") * t / F.col("n")).alias("rate"))
     return df.join(F.broadcast(rates), source_col).where(
         sample_bucket_col(F.col(key_col))
         < F.floor(F.col("rate") * F.lit(SAMPLE_BUCKETS))

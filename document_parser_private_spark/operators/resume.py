@@ -317,7 +317,6 @@ def clean_columns(list_array: pa.ListArray) -> tuple[list[pa.Array],
 
 
 def extract_all_fused_op(df: DataFrame, columns: tuple[str, ...],
-                         spans_col: str = "spans", id_col: str = "doc_id",
                          carry: tuple[str, ...] = ()) -> DataFrame:
     """Whole-pipeline fused Python pass: the shared kernel
     (clean_columns) plus entity extraction (doc_entities) in ONE
@@ -340,16 +339,16 @@ def extract_all_fused_op(df: DataFrame, columns: tuple[str, ...],
     the memoized fuzzy index (_MEMO) is module-level and survives across
     batches and tasks in a reused worker (see doc_entities).
 
-    Output carries the id, the `carry` columns and the extraction
-    columns. Carried columns cross as their input Arrow arrays, which
+    Reads `doc_id` and the raw `spans`. Output carries `doc_id`, the
+    `carry` columns and the extraction columns. Carried columns cross as their input Arrow arrays, which
     Python hands back untouched (e.g. the checkpoint's `part`, so no
     join back to the input is needed); select any other upstream column
     you need before calling.
     """
     entities = tuple(e for e in ENTITY_TYPES if e in columns)
-    id_field = df.schema[id_col]
+    id_field = df.schema["doc_id"]
     out_type = T.StructType([
-        T.StructField(id_col, id_field.dataType, id_field.nullable),
+        T.StructField("doc_id", id_field.dataType, id_field.nullable),
         *(df.schema[c] for c in carry),
         *CLEAN_FIELDS,
         *(T.StructField(e, ENTITY_TYPES[e]) for e in entities),
@@ -362,7 +361,7 @@ def extract_all_fused_op(df: DataFrame, columns: tuple[str, ...],
         proj_memo: dict = {}
         for b in batches:
             forget_zip_importers()
-            clean, secs = clean_columns(b.column(spans_col))
+            clean, secs = clean_columns(b.column("spans"))
             values = [doc_entities(d, entities, edu_memo, proj_memo)
                       for d in secs]
             cols = dict(zip((f.name for f in CLEAN_FIELDS), clean))
@@ -374,7 +373,7 @@ def extract_all_fused_op(df: DataFrame, columns: tuple[str, ...],
                 schema=pa_schema,
             )
 
-    out = df.select(id_col, *carry, spans_col).mapInArrow(fused, out_type)
+    out = df.select("doc_id", *carry, "spans").mapInArrow(fused, out_type)
     sec = F.col("sections")
     return (
         out.withColumn("contact", contact_struct(sec["contact"]))

@@ -6,8 +6,8 @@ the correctness oracle:
                    pass (pyarrow.compute RE2 over whole columns)
   simhash_agg    — ONE mapInArrow pass (operators/batch.map_docs) with a
                    per-doc numpy bit vote over token hashes
-  lexical_stats  — (doc, token, cnt) rows from one map_docs pass, then
-                   codegen aggregates
+  lexical_stats  — one row per doc from ONE map_docs pass; the entropy
+                   sum folds natively over the doc's count array
 The native *_col expressions stay exported for composition.
 
 Deterministic formulas (authoritative definitions for this engine):
@@ -62,10 +62,6 @@ LANG_PRIORITY = ("en", "de", "fr", "es", "zh")
 
 def token_count_col(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(WORD_RE), F.lit(0))).cast("long")
-
-
-def bpe_token_count_col(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_RE), F.lit(0))).cast("long")
 
 
 def _hits(text: Column, words: tuple[str, ...]) -> Column:
@@ -308,34 +304,35 @@ def lexical_stats(df: DataFrame, text_col: str = "text",
     near-maximal entropy with high hapax_frac flags gibberish — the
     standard pair of corpus-curation signals next to quality_score.
 
-    Scale shape: (doc, token, cnt) rows from one map_docs pass
-    (_word_count_rows_arrow), then one codegen groupBy (doc); left join
-    back to the input keeps zero-token docs (NULL stats). The ln()
-    calls are IEEE doubles identical across Spark/DuckDB at round-6
-    (same contract as operators/lm.py avg_logp).
+    Scale shape: ONE map_docs pass, zero shuffles. Per doc it returns
+    one row, silent docs included: the exact integer counts (n_tokens,
+    n_types, hapax) and the doc's per-type counts `cnt`. The float sum
+    of c ln c stays in the JVM as a per-doc aggregate() fold over `cnt`
+    (PLANS.md §23), so the ln() calls are the same IEEE doubles as in
+    the DuckDB twin at round-6 (the operators/lm.py avg_logp contract).
+    A doc with no tokens (null text included) gets zeros and NULL
+    ratios; each division is guarded, so ANSI mode never sees a zero
+    divisor.
     """
-    did = F.col(id_col)
-    # (doc, token, cnt) rides the shared mapInArrow tokenizer+counter:
-    # the JVM regexp explode + groupBy(doc, token) hash agg it replaces
-    # was the dominant cost at 50k docs (guide §4.2), and the exchange
-    # ahead of the per-doc rollup now carries already-collapsed rows.
-    per = _word_count_rows_arrow(df.select(did, F.col(text_col)),
-                                 id_col, text_col)
-    st = per.groupBy(did).agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.count("*").alias("n_types"),
-        F.sum((F.col("cnt") == 1).cast("long")).alias("_hapax"),
-        F.sum(F.col("cnt").cast("double") * F.log(F.col("cnt").cast("double")))
-        .alias("_clnc"),
-    )
+    from collections import Counter
+
+    def per_doc(tx):
+        cnt = list(Counter(tokens(tx)).values())
+        return ([sum(cnt)], [len(cnt)], [cnt.count(1)], [cnt])
+
+    per = map_docs(df, id_col, text_col,
+                   "n_tokens long, n_types long, _hapax long, "
+                   "cnt array<bigint>", per_doc)
     n = F.col("n_tokens").cast("double")
-    return df.select(did).join(st, id_col, "left").select(
-        did.cast("long").alias(id_col),
-        F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long")
-        .alias("n_tokens"),
-        F.coalesce(F.col("n_types"), F.lit(0)).cast("long").alias("n_types"),
-        F.round(F.col("n_types") / n, 6).alias("ttr"),
-        F.round(F.col("_hapax") / F.col("n_types"), 6).alias("hapax_frac"),
-        F.round((F.log(n) - F.col("_clnc") / n) / F.lit(0.6931471805599453), 6)
+    types = F.col("n_types")
+    clnc = F.aggregate("cnt", F.lit(0.0), lambda acc, c: acc + c * F.log(c))
+    return per.select(
+        F.col(id_col).cast("long").alias(id_col),
+        "n_tokens", "n_types",
+        F.when(n > 0, F.round(types / n, 6)).alias("ttr"),
+        F.when(types > 0, F.round(F.col("_hapax") / types, 6))
+        .alias("hapax_frac"),
+        F.when(n > 0, F.round((F.log(n) - clnc / n)
+                              / F.lit(0.6931471805599453), 6))
         .alias("entropy"),
     )

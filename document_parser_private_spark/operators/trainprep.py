@@ -26,7 +26,8 @@ Scale shape (100 TB posture):
   - decontaminate: both gram streams come from map_docs passes; the
     benchmark side is grams-distinct and BROADCAST (benchmarks are tiny
     relative to the corpus); the corpus side is a narrow broadcast-hash
-    join -> one doc_id-keyed count. No corpus-sized shuffle.
+    left join -> one doc_id-keyed count, map-side partial per doc. No
+    corpus-sized shuffle; every doc keeps its row from the one pass.
   - chunk_documents: zero shuffles — tokens are bound ONCE per row
     (functions/bind.bind_once, avoiding the per-element re-eval cliff),
     chunk structs are built in a single transform(), and the explode
@@ -106,16 +107,12 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
 
 def _ngram_rows_arrow(df: DataFrame, n: int, id_col: str, text_col: str,
                       hashed: bool = True,
-                      per_doc_distinct: bool = False,
                       counted: bool = False) -> DataFrame:
     """(id, gram) rows via ONE map_docs pass — the shared n-gram
     builder. A gram is n space-joined `tokens`; hashed=True emits its
     hashlib md5 hex (== Spark md5 on UTF-8 bytes) as `gh`. Case folding
     is NOT done here — lower() the text column natively upstream so the
     engine contract for case stays in one place.
-
-    per_doc_distinct mirrors array_distinct-after-build: first
-    occurrence order, one row per distinct gram per doc.
 
     counted=True emits (id, gram, cnt) — one row per DISTINCT gram per
     doc with its occurrence count, exactly groupBy(id, gram).count()
@@ -124,16 +121,12 @@ def _ngram_rows_arrow(df: DataFrame, n: int, id_col: str, text_col: str,
     import hashlib
     from collections import Counter
 
-    assert not (counted and per_doc_distinct)
-
     def per_doc(tx):
         t = tokens(tx)
         grams = [" ".join(t[i:i + n]) for i in range(len(t) - (n - 1))]
         if counted:
             c = Counter(grams)
             grams, cnt = list(c), c.values()
-        elif per_doc_distinct:
-            grams = list(dict.fromkeys(grams))
         if hashed:
             grams = [hashlib.md5(g.encode()).hexdigest() for g in grams]
         return (grams, cnt) if counted else (grams,)
@@ -152,32 +145,37 @@ def decontaminate(df: DataFrame, benchmark: DataFrame, n: int = 8,
     to decontaminate a training corpus against an eval set.
 
     The benchmark gram set is deduplicated and broadcast — the corpus
-    side never shuffles its text, only (doc_id, gram-hash) pairs into a
-    doc_id-keyed count."""
-    # both gram streams ride the shared map_docs builder — the
-    # interpreted per-gram md5 HOF was the operator's dominant cost
-    # (the bench side keys by a constant since only the gram set
-    # matters).
+    side never shuffles its text, only (doc_id, gram-hash) pairs. Each
+    doc's distinct gram hashes come from one map_docs pass; a doc with
+    fewer than n tokens (null text included) emits one null hash, so a
+    left join to the benchmark set and one doc_id-keyed count of the
+    benchmark side keep every doc, silent ones at zero hits."""
+    import hashlib
+
+    # both gram streams ride map_docs — the interpreted per-gram md5 HOF
+    # was the operator's dominant cost (the bench side keys by a
+    # constant since only the gram set matters).
     bench_grams = (
         _ngram_rows_arrow(
             benchmark.select(F.lit(0).alias("_b"),
                              F.col(bench_text_col).alias("_t")),
             n, "_b", "_t",
-        ).select("gh").distinct()
+        ).select(F.col("gh").alias("_bgh")).distinct()
     )
-    doc_grams = _ngram_rows_arrow(
-        df.select(id_col, text_col), n, id_col, text_col,
-        per_doc_distinct=True,
-    )
-    hits = (
-        doc_grams.join(F.broadcast(bench_grams), "gh")
+
+    def per_doc(tx):
+        t = tokens(tx)
+        grams = dict.fromkeys(" ".join(t[i:i + n])
+                              for i in range(len(t) - (n - 1)))
+        return ([hashlib.md5(g.encode()).hexdigest() for g in grams]
+                or [None],)
+
+    return (
+        map_docs(df, id_col, text_col, "gh string", per_doc)
+        .join(F.broadcast(bench_grams), F.col("gh") == F.col("_bgh"), "left")
         .groupBy(id_col)
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return df.select(F.col(id_col)).join(hits, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-        (F.coalesce(F.col("n_hits"), F.lit(0)) > 0).alias("contaminated"),
+        .agg(F.count("_bgh").alias("n_hits"))
+        .withColumn("contaminated", F.col("n_hits") > 0)
     )
 
 

@@ -40,7 +40,6 @@ FINAL_COLUMNS = (
 def repartition_salted(
     df: DataFrame,
     num_partitions: int | None = None,
-    heavy_bytes: int = HEAVY_BYTES,
 ) -> DataFrame:
     """Salted repartition spreading the giant-doc tail (north_star skew
     rule).
@@ -70,7 +69,7 @@ def repartition_salted(
         )
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     salt = F.when(
-        F.col("byte_size") > heavy_bytes,
+        F.col("byte_size") > HEAVY_BYTES,
         F.xxhash64(F.lit("heavy"), F.col("doc_id")),
     ).otherwise(F.xxhash64(F.col("doc_id")))
     return df.repartition(n, salt)

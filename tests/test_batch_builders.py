@@ -6,6 +6,7 @@ cases (empty text next to null text, whitespace-only, \x0b vertical tab
 inside the ASCII token contract, repeated tokens, unicode), with long
 and string ids, and on a corpus where no doc emits a row. Values and
 types must be identical — these rewrites are pure plan-shape changes.
+The per-doc operators keep one row per input doc, silent docs included.
 """
 
 from collections import Counter
@@ -17,13 +18,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from document_parser_private_spark.operators.batch import map_docs, tokens
+from document_parser_private_spark.operators.curation import strip_boilerplate
 from document_parser_private_spark.operators.textstats import (
     WORD_RE,
     _word_count_rows_arrow,
+    lexical_stats,
     simhash_agg,
 )
 from document_parser_private_spark.operators.trainprep import (
     _ngram_rows_arrow,
+    decontaminate,
     repetition_stats,
 )
 
@@ -217,6 +221,42 @@ def test_lm_self_scoring_matches_explicit_train(spark, text_docs):
     a = {tuple(r) for r in lm_score(d).collect()}
     b = {tuple(r) for r in lm_score(d, train=d).collect()}
     assert a == b
+
+
+# null text, "", a doc below the 2-gram length and a normal doc: every
+# operator keeps one row per input doc, silent ones included
+SILENT_CONTRACT_DOCS = [
+    (1, None), (2, ""), (3, "solo"),
+    (4, "the cat sat\nsolo\nthe cat sat on the mat"),
+]
+
+
+@pytest.mark.parametrize("op,want", [
+    ("lexical_stats", {1: (0, 0, None, None, None),
+                       2: (0, 0, None, None, None),
+                       3: (1, 1, 1.0, 1.0, 0.0),
+                       4: (10, 6, 0.6, 0.5, 2.446439)}),
+    ("decontaminate", {1: (0, False), 2: (0, False), 3: (0, False),
+                       4: (3, True)}),
+    ("strip_boilerplate", {1: (None, None, ""), 2: (1, 0, ""),
+                           3: (1, 1, ""),
+                           4: (3, 1, "the cat sat\nthe cat sat on the mat")}),
+])
+def test_one_row_per_input_doc(spark, op, want):
+    """Each per-doc operator emits its silent docs from its one pass:
+    zero counts and NULL ratios for a doc with no tokens, zero hits for
+    a doc with no n-gram, NULL line counts for a null text."""
+    df = spark.createDataFrame(SILENT_CONTRACT_DOCS, "doc_id long, text string")
+    out = {
+        "lexical_stats": lambda: lexical_stats(df),
+        "decontaminate": lambda: decontaminate(
+            df, spark.createDataFrame([("the cat sat on",)], "text string"),
+            n=2),
+        "strip_boilerplate": lambda: strip_boilerplate(df, min_docs=2),
+    }[op]()
+    rows = out.collect()
+    assert len(rows) == len(SILENT_CONTRACT_DOCS)
+    assert {r[0]: tuple(r[1:]) for r in rows} == want
 
 
 def test_repetition_stats_matches_agg_form(spark, tricky_inputs,

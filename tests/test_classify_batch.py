@@ -2,8 +2,9 @@
 reference in semantics: `classify_spans` equals `classify_span` on every
 span, the engine-neutral classify patterns match exactly what their
 earlier (?i) / \\s spelling matched, in Python re and in RE2 alike, and
-`reading_order` equals `layout_reading_order` per doc. No Spark
-session: these run inside the worker."""
+`reading_order` (and `order_spans`, the layout pass over span lists
+built on it) equals `layout_reading_order` per doc. No Spark session:
+these run inside the worker."""
 
 import re
 
@@ -13,6 +14,10 @@ import pyarrow.compute as pc
 from hypothesis import example, given, settings, strategies as st
 
 from document_parser_private_spark import semantics as S
+from document_parser_private_spark.operators.layout import (
+    SPAN_ARROW,
+    order_spans,
+)
 from document_parser_private_spark.operators.resume import (
     classify_spans,
     reading_order,
@@ -173,3 +178,21 @@ def test_batch_reading_order_equals_layout_reading_order(docs):
         want = [s["i"] for s in S.layout_reading_order(spans)]
         assert got == want, d
         start += len(d)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.none() | st.lists(OFFSET, max_size=9), max_size=6),
+       st.integers(0, 2))
+def test_order_spans_equals_layout_reading_order(docs, cut):
+    """layout_order_op's batch body: per row, the spans of
+    layout_reading_order with offsets renumbered 0..n-1, a null row as
+    [], on a sliced array too."""
+    rows = [None if d is None else
+            [{"kind": "text", "text": f"s{i}", "media_ref": None,
+              "offset": o} for i, o in enumerate(d)]
+            for d in [[0]] * cut + docs]
+    got = order_spans(pa.array(rows, SPAN_ARROW).slice(cut)).to_pylist()
+    assert got == [
+        [] if d is None else
+        [dict(s, offset=i) for i, s in enumerate(S.layout_reading_order(d))]
+        for d in rows[cut:]]
