@@ -11,7 +11,8 @@ partition; parquet is used because the sandbox ships no Iceberg runtime):
     out_dir/lineage/...              append-only ledger: one row per
                                      completed partition per run, with
                                      its doc_count
-    out_dir/metrics/...              extraction metrics per partition
+    out_dir/metrics/part=<p>/...     extraction metrics per partition,
+                                     dynamic overwrite
 
 Plan per commit group: the fused extraction kernel runs ONCE (`part`
 crosses it as an untouched Arrow column, so nothing joins back to the
@@ -21,17 +22,18 @@ layout, the section FSM and skills, and never parses the education,
 experience or projects entities, which a commit does not write. The
 group's metrics are then aggregated from the committed
 `extracted/part=<p>` directories alone — a few int columns, no Python —
-so they count exactly the rows that were committed. The metrics and
-lineage rows (at most parts_per_commit each) are written as native
-literal plans.
+so they count exactly the rows that were committed, and written
+straight from that aggregate without leaving the JVM. The lineage rows
+(at most parts_per_commit) are written as one native literal plan and
+carry each part's input doc count, taken from the scan that lists the
+parts, so a lost doc shows as a lineage/metrics mismatch.
 
 Correctness argument (kill anywhere, rerun, identical final output):
   1. a partition's data is written with dynamic partition overwrite —
      rewriting partition p replaces exactly partition p, so a retry after
      a mid-write kill cannot duplicate rows;
-  2. the metrics rows for the group are appended after its data commit,
-     read from that committed data (see read_metrics for the orphans a
-     kill here leaves);
+  2. the metrics of partition p are overwritten from p's committed
+     data, idempotent like step 1;
   3. the lineage row for p is appended only AFTER p's data commit; a kill
      between the two re-processes p (idempotent by 1);
   4. resume = anti-join of all partitions against lineage 'done' rows, so
@@ -79,7 +81,7 @@ def _read_side_table(spark: SparkSession, path: str,
     Existence is checked through the path's Hadoop FileSystem, so a
     missing table costs no Spark read (reading a missing path makes
     Spark log a FileNotFoundException stack trace at WARN on every fresh
-    run). A table whose first append was killed before committing a file
+    run). A table whose first write was killed before committing a file
     (only `_temporary/` on disk) reads as empty. Any error reading an
     existing table (an unreadable file, a permission problem) propagates,
     because treating a broken ledger as empty would silently recompute
@@ -94,29 +96,14 @@ def _read_side_table(spark: SparkSession, path: str,
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Crash-consistent metrics view: metrics are appended (step 2)
-    BEFORE the lineage commit point (step 3), so a kill between the two
-    re-processes the group and appends metrics again. Naive sums over the
-    raw metrics table double-count those orphans; joining to lineage
-    'done' rows on (part, run_id) drops them — a metrics row is valid
-    only if its exact (part, run_id) reached the commit point. A run
-    killed before any commit reads as empty."""
+    """The metrics rows of the parts the lineage ledger marks 'done'. A
+    run killed before any commit reads as empty."""
     metrics = _read_side_table(spark, f"{out_dir}/metrics", METRICS_SCHEMA)
     lineage = _read_side_table(spark, f"{out_dir}/lineage", LINEAGE_SCHEMA)
     if metrics is None or lineage is None:
         return spark.createDataFrame([], METRICS_SCHEMA)
-    done = (
-        lineage.where(F.col("status") == "done")
-        .select("part", "run_id")
-        .distinct()
-    )
-    # Keyed dedupe guards the resume-with-same-run_id case: the orphan and
-    # its re-run carry the same (part, run_id) — the pipeline is
-    # deterministic, so whichever row survives is correct. Keying on the
-    # explicit commit key (not whole-row equality) keeps the invariant
-    # even if a nondeterministic metric column (e.g. timing) is added.
-    return metrics.join(done, ["part", "run_id"], "left_semi") \
-        .dropDuplicates(["part", "run_id"])
+    done = lineage.where(F.col("status") == "done")
+    return metrics.join(done, "part", "left_semi")
 
 
 def _lineage_done(spark: SparkSession, out_dir: str) -> set[int]:
@@ -136,7 +123,7 @@ def _lineage_done(spark: SparkSession, out_dir: str) -> set[int]:
 
 def _append_literal_rows(spark: SparkSession, schema: str,
                          rows: list[tuple], path: str) -> None:
-    """Append a handful of rows as one native literal plan
+    """Append a handful of lineage rows as one native literal plan
     (inline(array(struct(lit...)))), skipping createDataFrame's Python
     row conversion — a 4-row append measured 0.24 s against 0.42 s
     (median, 4 vCPU, local[4])."""
@@ -167,10 +154,10 @@ def run_with_checkpoint(
 
     fail_after_commits: test hook — raise after N commits to simulate a
     mid-run kill. fail_before_lineage: test hook — raise during the Nth
-    commit after the metrics append but before the lineage commit point
-    (the orphan-metrics window read_metrics must survive).
+    commit after the metrics write but before the lineage commit point.
 
-    Returns {"processed_parts": [...], "skipped_parts": [...]}.
+    Returns {"processed_parts": [...], "skipped_parts": [...],
+    "run_id": ...}.
     """
     spark = df.sparkSession
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -188,9 +175,11 @@ def run_with_checkpoint(
     sc = spark.sparkContext
     prev_description = sc.getLocalProperty("spark.job.description")
     try:
-        all_parts = sorted(
-            r["part"] for r in df.select("part").distinct().collect()
-        )
+        part_docs = {
+            r["part"]: r["count"]
+            for r in df.groupBy("part").count().collect()
+        }
+        all_parts = sorted(part_docs)
         done = _lineage_done(spark, out_dir)
         pending = [p for p in all_parts if p not in done]
         skipped = [p for p in all_parts if p in done]
@@ -213,9 +202,9 @@ def run_with_checkpoint(
                 "summary",
                 F.to_json("skills").alias("skills_json"),
             ).write.mode("overwrite").partitionBy("part").parquet(extracted)
-            # 2. metrics append, aggregated from the group's committed
+            # 2. metrics overwrite, aggregated from the group's committed
             # partitions only
-            committed = (
+            (
                 spark.read.schema(COUNTS_SCHEMA)
                 .option("basePath", extracted)
                 .parquet(*(f"{extracted}/part={p}" for p in group))
@@ -227,27 +216,22 @@ def run_with_checkpoint(
                     F.sum(
                         F.when(F.col("blocks_kept").isNull(), 1).otherwise(0)
                     ).alias("parse_failures"),
+                    F.lit(run_id).alias("run_id"),
                 )
-                .collect()
-            )
-            _append_literal_rows(
-                spark, METRICS_SCHEMA,
-                [(r["part"], r["doc_count"], r["blocks_kept"],
-                  r["blocks_dropped"], r["parse_failures"], run_id)
-                 for r in committed],
-                f"{out_dir}/metrics",
+                .write.mode("overwrite").partitionBy("part")
+                .parquet(f"{out_dir}/metrics")
             )
             if fail_before_lineage is not None and commits + 1 >= fail_before_lineage:
                 raise RuntimeError(
-                    "simulated failure between metrics append and lineage "
+                    "simulated failure between metrics write and lineage "
                     "commit (test hook)"
                 )
             # 3. lineage append LAST (commit point)
             finished = time.time()
             _append_literal_rows(
                 spark, LINEAGE_SCHEMA,
-                [(r["part"], "done", run_id, r["doc_count"], started,
-                  finished) for r in committed],
+                [(p, "done", run_id, part_docs[p], started, finished)
+                 for p in group],
                 f"{out_dir}/lineage",
             )
             processed.extend(group)

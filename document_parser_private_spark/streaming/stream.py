@@ -5,9 +5,9 @@ batch Iceberg snapshots, but the extraction transforms are all narrow
 per-document maps — so the batch pipeline's kernel runs unchanged
 in a streaming query (`readStream` on a documents directory → kernel →
 `writeStream`). This module provides the micro-batch ingestion path a
-continuously-fed 100 TB corpus would use (file-source backpressure via
-maxFilesPerTrigger; exactly-once via the streaming checkpoint +
-idempotent sink).
+continuously-fed 100 TB corpus would use (the file source's default
+trigger sizing; exactly-once via the streaming checkpoint + idempotent
+sink).
 
 Also includes the canonical event-time windowed aggregation with
 watermark (late-data handling) over an events stream.
@@ -35,23 +35,14 @@ def _clean_and_sections_udf(spans: pa.Array) -> pa.Array:
     return pa.StructArray.from_arrays(clean, fields=list(CLEAN_ARROW))
 
 
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def stream_extract(spark: SparkSession, input_dir: str) -> DataFrame:
     """readStream(documents dir) -> classify -> layout -> sections, via
     the batch pipeline's kernel (operators/resume.clean_columns).
 
     No shuffle anywhere: every micro-batch is a pure narrow map, so the
     query needs no state store and sustains source-rate throughput.
     """
-    reader = (
-        spark.readStream.schema(DOCS_DDL).format("parquet")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.load(input_dir)
+    docs = spark.readStream.schema(DOCS_DDL).parquet(input_dir)
     out = docs.select("doc_id", _clean_and_sections_udf("spans").alias("_k"))
     return out.select("doc_id", "_k.*")
 
@@ -202,7 +193,6 @@ def stream_dedup(
     spark: SparkSession,
     input_dir: str,
     horizon: str = "10 minutes",
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming exact dedup over the document fingerprint with BOUNDED
     state: dropDuplicatesWithinWatermark keeps a fingerprint in the state
@@ -216,10 +206,7 @@ def stream_dedup(
     (textstats.fingerprint_col over the concatenated span text)."""
     from ..operators.textstats import fingerprint_col
 
-    reader = spark.readStream.schema(DOCS_DDL).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.load(input_dir)
+    docs = spark.readStream.schema(DOCS_DDL).parquet(input_dir)
     text = F.concat_ws(
         "\n", F.transform("spans", lambda s: F.coalesce(s["text"], F.lit("")))
     )

@@ -78,11 +78,11 @@ def test_metrics_side_table(spark, corpus_df, tmp_path):
 
 
 def test_metrics_survive_orphan_window(spark, corpus_df, tmp_path):
-    """Kill between the metrics append and the lineage commit: the raw
-    metrics table double-counts the re-processed group, read_metrics
-    does not (lineage semi-join on (part, run_id) drops orphans)."""
+    """Kill between the metrics write and the lineage commit: the resume
+    re-processes the group and overwrites its metrics partitions, so the
+    raw metrics table is exact, like the read_metrics view."""
     out = str(tmp_path / "orphan")
-    with pytest.raises(RuntimeError, match="between metrics append"):
+    with pytest.raises(RuntimeError, match="between metrics write"):
         run_with_checkpoint(
             corpus_df, out, parts_per_commit=3, fail_before_lineage=1
         )
@@ -94,11 +94,41 @@ def test_metrics_survive_orphan_window(spark, corpus_df, tmp_path):
     raw = spark.read.parquet(f"{out}/metrics").collect()
     clean = read_metrics(spark, out).collect()
     n_docs = corpus_df.count()
-    # the orphaned group's rows inflate the raw sum ...
-    assert sum(r["doc_count"] for r in raw) > n_docs
-    # ... while the lineage-joined view is exact, one row per partition
-    assert sum(r["doc_count"] for r in clean) == n_docs
-    assert sorted(r["part"] for r in clean) == list(range(8))
+    for rows in (raw, clean):
+        assert sum(r["doc_count"] for r in rows) == n_docs
+        assert sorted(r["part"] for r in rows) == list(range(8))
+
+
+@pytest.mark.parametrize("kill", [{"fail_after_commits": 1},
+                                  {"fail_before_lineage": 1}])
+def test_metrics_match_committed_data_and_lineage_after_resume(
+        spark, corpus_df, tmp_path, kill):
+    """After a kill and a resume, each part's one metrics row recounts
+    its committed extracted/part=<p> data and carries the run_id of the
+    part's lineage 'done' row."""
+    out = str(tmp_path / "invariant")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run_with_checkpoint(corpus_df, out, parts_per_commit=3, **kill)
+    run_with_checkpoint(corpus_df, out, parts_per_commit=3)
+
+    recount = defaultdict(lambda: [0, 0, 0])
+    for r in spark.read.parquet(f"{out}/extracted").collect():
+        c = recount[r["part"]]
+        c[0] += 1
+        c[1] += r["blocks_kept"]
+        c[2] += r["blocks_dropped"]
+    done_run = {
+        r["part"]: r["run_id"]
+        for r in spark.read.parquet(f"{out}/lineage").collect()
+        if r["status"] == "done"
+    }
+    metrics = spark.read.parquet(f"{out}/metrics").collect()
+    assert sorted(r["part"] for r in metrics) == list(range(8))
+    for r in metrics:
+        p = r["part"]
+        assert [r["doc_count"], r["blocks_kept"],
+                r["blocks_dropped"]] == recount[p], p
+        assert r["run_id"] == done_run[p], p
 
 
 def test_checkpoint_forces_dynamic_overwrite(spark, corpus_df, tmp_path):
@@ -251,13 +281,14 @@ def test_commit_group_jobs_are_labelled(traced_run):
 
 
 def test_commit_group_job_counts(traced_run):
-    """Each commit group runs six jobs. Read back with no schema, the
-    committed counts would add a seventh that infers it from a parquet
-    footer."""
+    """Each commit group runs five jobs. The metrics are written from
+    the read-back aggregate, with no job that collects them to the
+    driver. Read back with no schema, the committed counts would add a
+    sixth that infers it from a parquet footer."""
     rid = traced_run["run_id"]
     per_label = Counter(traced_run["jobs"].values())
     assert [per_label[f"checkpoint run={rid} parts={g}"]
-            for g in ([0, 1, 2], [3, 4, 5], [6, 7])] == [6, 6, 6], per_label
+            for g in ([0, 1, 2], [3, 4, 5], [6, 7])] == [5, 5, 5], per_label
 
 
 def test_broken_ledger_is_not_read_as_empty(spark, corpus_df, tmp_path):
